@@ -56,9 +56,21 @@ def ward_labels(X: np.ndarray, distance_threshold: float = 0.2) -> np.ndarray:
 
 
 def cluster_embeddings_df(df, distance_threshold: float = 0.2,
-                          id_col: str = "record_id", vec_col: str = "embedding"):
-    """Collect (small) embeddings, ward-cluster, return (id, cluster) DataFrame."""
-    rows = df.select(id_col, vec_col).collect()
+                          id_col: str = "record_id", vec_col: str = "embedding",
+                          max_rows: int = 10_000):
+    """Collect (small) embeddings, ward-cluster, return (id, cluster) DataFrame.
+
+    The collect is a DRIVER-SIDE contract: it fetches ``max_rows + 1`` rows
+    and fails loudly past the cap instead of running the driver out of
+    memory (the same contract as ``sampling.collect_strata``).
+    """
+    rows = df.select(id_col, vec_col).limit(max_rows + 1).collect()
+    if len(rows) > max_rows:
+        raise ValueError(
+            f"more than max_rows={max_rows} embeddings; ward clustering runs "
+            "on the driver — at this scale threshold the pair similarities "
+            "and use operators.components, or raise the cap explicitly"
+        )
     ids = [r[id_col] for r in rows]
     X = np.array([r[vec_col] for r in rows], dtype=np.float64)
     labels = ward_labels(X, distance_threshold)

@@ -13,6 +13,12 @@ cluster: ``checkpoint`` to the cluster FS / an Iceberg stage table — see
 ``plans/pipeline.py``); convergence is detected by an edge-set checksum, one
 cheap aggregate per round.
 
+Driver finish: the checksum also counts the edge set.  Once that count is at
+most ``DRIVER_FINISH_EDGES`` — at the start, or after any round has shrunk a
+large graph — the edges are collected with Arrow and labelled by a vectorised
+numpy union-find, saving the remaining rounds' Spark jobs.  Labels are the
+same "min reachable record id".
+
 Singletons: the reference keeps every record that entered any block as its own
 component (``graph_visualization.py:54-59``); ``assign_components`` takes the
 full vertex set and left-anti joins to re-attach them.
@@ -20,6 +26,8 @@ full vertex set and left-anti joins to re-attach them.
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -72,6 +80,49 @@ def _checksum(edges: DataFrame) -> tuple[int, int]:
     return int(row["c"]), int(row["h"])
 
 
+# Edge count at or below which CC finishes on the driver: 4M int64 pairs are
+# 64 MB through Arrow, and the union-find labels them in about a second.
+DRIVER_FINISH_EDGES = 1 << 22
+
+
+def _union_find_labels(src: np.ndarray, dst: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(vertex ids, min reachable id) over an edge list, vectorised.
+
+    Vertices are renumbered densely in id order, so the minimum dense index
+    of a component is its minimum id.  Each round hooks every root onto the
+    smaller root across each live edge (``np.minimum.at``), then
+    pointer-jumps until every vertex points at its root; an edge is live
+    while its ends have different roots.  ``parent[x] <= x`` always holds,
+    so the component minimum is always a root, and the last root standing.
+    """
+    ids, dense = np.unique(np.concatenate([src, dst]), return_inverse=True)
+    u, v = dense[: len(src)], dense[len(src) :]
+    parent = np.arange(len(ids))
+    while len(u):
+        pu, pv = parent[u], parent[v]
+        m = np.minimum(pu, pv)
+        np.minimum.at(parent, pu, m)
+        np.minimum.at(parent, pv, m)
+        while True:
+            jumped = parent[parent]
+            if np.array_equal(jumped, parent):
+                break
+            parent = jumped
+        live = parent[u] != parent[v]
+        u, v = u[live], v[live]
+    return ids, ids[parent]
+
+
+def _driver_finish(e: DataFrame) -> DataFrame:
+    edges = e.toArrow()
+    ids, labels = _union_find_labels(
+        edges.column("src").to_numpy(), edges.column("dst").to_numpy()
+    )
+    return e.sparkSession.createDataFrame(
+        pa.table({"record_id": ids, "component_id": labels})
+    )
+
+
 def _completed_rounds(spark, checkpoint_dir: str) -> list[int]:
     """Round indices under ``checkpoint_dir`` whose parquet write completed
     (``_SUCCESS`` marker present) — via the Hadoop FileSystem API, so the
@@ -103,12 +154,13 @@ def _persist_round(e: DataFrame, checkpoint_dir: str, i: int) -> DataFrame:
 def connected_components(
     edges: DataFrame,
     max_iterations: int = 50,
-    checkpoint: bool = True,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """(record_id, component_id) for every vertex incident to an edge.
 
     ``component_id`` is the minimum record id reachable from the vertex.
+    Before each star round an edge set of at most ``DRIVER_FINISH_EDGES``
+    edges is finished on the driver instead (module docstring).
 
     ``checkpoint_dir`` switches per-round lineage cuts from
     ``localCheckpoint`` (executor-memory blocks — lost with an executor) to
@@ -117,7 +169,8 @@ def connected_components(
     with the same directory RESUMES from the latest completed round instead
     of recomputing the input chain — the recovery story a days-long CC run
     over a 10^12-edge graph needs.  Convergence still uses the bit_xor
-    checksum, recomputed from the loaded round on resume.
+    checksum, recomputed from the loaded round on resume.  The durable path
+    runs every round distributed, so each round it records is on storage.
     """
     spark = edges.sparkSession
     e = edges.select(
@@ -131,14 +184,16 @@ def connected_components(
             e = spark.read.parquet(f"{checkpoint_dir}/round_{done[-1]:04d}")
         else:
             e = _persist_round(e, checkpoint_dir, 0)
-    elif checkpoint:
+    else:
         e = e.localCheckpoint(eager=True)
     prev = _checksum(e)
     for i in range(start_round, start_round + max_iterations):
+        if not checkpoint_dir and prev[0] <= DRIVER_FINISH_EDGES:
+            return _driver_finish(e)
         e = _small_star(_large_star(e))
         if checkpoint_dir:
             e = _persist_round(e, checkpoint_dir, i)
-        elif checkpoint:
+        else:
             e = e.localCheckpoint(eager=True)
         cur = _checksum(e)
         if cur == prev:

@@ -1,9 +1,12 @@
-"""Pairwise precision/recall/F1 over canonical (min,max) pairs.
+"""Pairwise precision/recall/F1 from cluster sizes, plus threshold metrics.
 
 Reference ``block_klsh/clustering/perf_metrics.py:9-26``:
     tp = |pred ∩ true|, fp = |pred − true|, fn = |true − pred|
-computed there with Python sets; here with a full outer join so it streams at
-any scale.  F1 uses the reference's exact guard: 0 when precision*recall == 0.
+over the sets of same-cluster record pairs, computed there with Python sets.
+Here no pair is enumerated: a cluster of n records holds C(n,2) pairs, so
+the three counts come from the contingency table of (predicted, true)
+cluster sizes.  F1 uses the reference's exact guard: 0 when
+precision*recall == 0.
 """
 
 from __future__ import annotations
@@ -12,23 +15,63 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def canonicalize_pairs(df: DataFrame, c1: str = "id1", c2: str = "id2") -> DataFrame:
-    return df.select(
-        F.least(c1, c2).alias("id1"), F.greatest(c1, c2).alias("id2")
-    ).distinct()
+def _pair_count(df: DataFrame, *clusters: str) -> DataFrame:
+    """One row: Σ C(n,2) over the groups of ``clusters``, in exact integers."""
+    n = F.col("count")
+    return df.groupBy(*clusters).count().agg(
+        F.coalesce(F.shiftright(F.sum(n * (n - 1)), 1), F.lit(0)).alias("pairs")
+    )
 
 
-def clusters_to_pairs(assignment: DataFrame, cluster_col: str = "component_id") -> DataFrame:
-    """All i<j pairs within each predicted cluster (ref klsh_engine.py:213-225).
+def cluster_pair_metrics(pred: DataFrame, true: DataFrame) -> DataFrame:
+    """One-row DataFrame (tp, fp, fn, precision, recall, f1).
 
-    Cluster-local self-join — same pattern as block-local pair generation.
+    ``pred`` and ``true`` are (record_id, cluster) assignments, each record
+    in at most one cluster per side.  Records with a null cluster form no
+    pairs; records on one side only add to that side's pairs.
+
+    * tp = Σ C(n,2) over (pred, true) cells of records on both sides;
+    * fp = Σ_pred C(n,2) − tp;
+    * fn = Σ_true C(n,2) − tp.
     """
-    a = assignment.alias("l")
-    b = assignment.alias("r")
-    return (
-        a.join(b, on=cluster_col)
-        .where(F.col("l.record_id") < F.col("r.record_id"))
-        .select(F.col("l.record_id").alias("id1"), F.col("r.record_id").alias("id2"))
+
+    def clean(df: DataFrame) -> DataFrame:
+        return df.select("record_id", "cluster").dropna().distinct()
+
+    p, t = clean(pred), clean(true)
+    tp = _pair_count(
+        p.join(t.withColumnRenamed("cluster", "true_cluster"), "record_id"),
+        "cluster",
+        "true_cluster",
+    ).select(F.col("pairs").alias("tp"))
+    counts = (
+        tp.crossJoin(_pair_count(p, "cluster").select(F.col("pairs").alias("np")))
+        .crossJoin(_pair_count(t, "cluster").select(F.col("pairs").alias("nt")))
+        .select(
+            "tp",
+            (F.col("np") - F.col("tp")).alias("fp"),
+            (F.col("nt") - F.col("tp")).alias("fn"),
+        )
+    )
+    return counts.select(
+        "tp",
+        "fp",
+        "fn",
+        (F.col("tp") / F.when(F.col("tp") + F.col("fp") > 0, F.col("tp") + F.col("fp"))).alias("_pr"),
+        (F.col("tp") / F.when(F.col("tp") + F.col("fn") > 0, F.col("tp") + F.col("fn"))).alias("_rc"),
+    ).select(
+        "tp",
+        "fp",
+        "fn",
+        F.coalesce(F.col("_pr"), F.lit(0.0)).alias("precision"),
+        F.coalesce(F.col("_rc"), F.lit(0.0)).alias("recall"),
+        F.coalesce(
+            F.when(
+                F.col("_pr") * F.col("_rc") > 0,
+                2 * F.col("_pr") * F.col("_rc") / (F.col("_pr") + F.col("_rc")),
+            ),
+            F.lit(0.0),
+        ).alias("f1"),
     )
 
 
@@ -139,36 +182,4 @@ def auroc(
             F.col("num") / F.greatest(F.col("npos") * F.col("nneg"), F.lit(1)),
             6,
         ).alias("auroc")
-    )
-
-
-def pairwise_metrics(pred_pairs: DataFrame, true_pairs: DataFrame) -> DataFrame:
-    """One-row DataFrame (tp, fp, fn, precision, recall, f1)."""
-    p = canonicalize_pairs(pred_pairs).withColumn("_p", F.lit(1))
-    t = canonicalize_pairs(true_pairs).withColumn("_t", F.lit(1))
-    joined = p.join(t, ["id1", "id2"], "full")
-    counts = joined.agg(
-        F.sum(F.when(F.col("_p").isNotNull() & F.col("_t").isNotNull(), 1).otherwise(0)).alias("tp"),
-        F.sum(F.when(F.col("_p").isNotNull() & F.col("_t").isNull(), 1).otherwise(0)).alias("fp"),
-        F.sum(F.when(F.col("_p").isNull() & F.col("_t").isNotNull(), 1).otherwise(0)).alias("fn"),
-    )
-    return counts.select(
-        "tp",
-        "fp",
-        "fn",
-        (F.col("tp") / F.when(F.col("tp") + F.col("fp") > 0, F.col("tp") + F.col("fp"))).alias("_pr"),
-        (F.col("tp") / F.when(F.col("tp") + F.col("fn") > 0, F.col("tp") + F.col("fn"))).alias("_rc"),
-    ).select(
-        "tp",
-        "fp",
-        "fn",
-        F.coalesce(F.col("_pr"), F.lit(0.0)).alias("precision"),
-        F.coalesce(F.col("_rc"), F.lit(0.0)).alias("recall"),
-        F.coalesce(
-            F.when(
-                F.col("_pr") * F.col("_rc") > 0,
-                2 * F.col("_pr") * F.col("_rc") / (F.col("_pr") + F.col("_rc")),
-            ),
-            F.lit(0.0),
-        ).alias("f1"),
     )

@@ -149,13 +149,11 @@ def encoder_similarity(
 
 
 def evaluate_against_truth(assignment: DataFrame, truth: DataFrame) -> DataFrame:
-    """assignment (record_id|url, component_id) vs truth (url, entity_id) → P/R/F1."""
-    truth_ids = truth.withColumn("record_id", F.xxhash64("url"))
-    pred_pairs = evaluate.clusters_to_pairs(
-        assignment.select("record_id", "component_id"), "component_id"
+    """assignment (record_id, component_id) vs truth (url, entity_id) → P/R/F1,
+    counted from cluster sizes (``evaluate.cluster_pair_metrics``)."""
+    return evaluate.cluster_pair_metrics(
+        assignment.select("record_id", F.col("component_id").alias("cluster")),
+        truth.select(
+            F.xxhash64("url").alias("record_id"), F.col("entity_id").alias("cluster")
+        ),
     )
-    true_pairs = evaluate.clusters_to_pairs(
-        truth_ids.select("record_id", F.col("entity_id").alias("component_id")),
-        "component_id",
-    )
-    return evaluate.pairwise_metrics(pred_pairs, true_pairs)

@@ -56,7 +56,13 @@ def main() -> None:
     import __spark_entry__ as entry_mod
     from oracle_compare import register_views
 
-    con = duckdb.connect(config={"temp_directory": "/tmp/duckdb_spill"})
+    # same spill cap as check_oracles.py: fail cleanly, never fill the disk
+    con = duckdb.connect(config={
+        "temp_directory": "/tmp/duckdb_spill",
+        "max_temp_directory_size": os.environ.get(
+            "SPARK_GRAFT_DUCK_TEMP_CAP", "50GiB"
+        ),
+    })
     register_views(con, entry_mod.TABLES, sf_dir)
 
     t0 = time.time()

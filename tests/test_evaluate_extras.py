@@ -1,7 +1,11 @@
-"""E5 threshold metrics + AUROC, two-stage blocking, pipeline determinism."""
+"""E5 threshold metrics + AUROC, E1 P/R/F1 vs a pair-set oracle, two-stage blocking,
+pipeline determinism."""
 
 from __future__ import annotations
 
+import itertools
+
+import numpy as np
 from pyspark.sql import functions as F
 
 from entity_resolution_spark.operators import blocking, evaluate
@@ -85,3 +89,52 @@ def test_auroc_null_scores_dropped(spark):
         "score double, is_match boolean",
     )
     assert evaluate.auroc(df).collect()[0]["auroc"] == 1.0
+
+
+def _pair_set(assignment):
+    """Same-cluster record pairs, as the reference's ``perf_metrics.py``."""
+    members: dict = {}
+    for rec, cluster in assignment:
+        if cluster is not None:
+            members.setdefault(cluster, []).append(rec)
+    return {
+        tuple(sorted(p))
+        for m in members.values()
+        for p in itertools.combinations(m, 2)
+    }
+
+
+def test_evaluate_against_truth_matches_pair_set_oracle(spark):
+    """Counting from cluster sizes == Python-set pair metrics, with records
+    missing from either side and null cluster ids on both sides."""
+    rng = np.random.default_rng(11)
+    for trial in range(4):
+        n = int(rng.integers(5, 80))
+        urls = [f"https://e{trial}.example/{i}" for i in range(n)]
+        rid = dict(
+            spark.createDataFrame([(u,) for u in urls], "url string")
+            .select("url", F.xxhash64("url"))
+            .collect()
+        )
+
+        def label(k):
+            return None if rng.random() < 0.1 else int(rng.integers(0, k))
+
+        truth = [(u, label(n // 3 + 1)) for u in urls if rng.random() > 0.15]
+        assignment = [
+            (rid[u], label(n // 4 + 1)) for u in urls if rng.random() > 0.15
+        ] + [(int(x), label(3)) for x in rng.integers(-(1 << 62), 1 << 62, size=3)]
+
+        pred = _pair_set(assignment)
+        true = _pair_set([(rid[u], e) for u, e in truth])
+        tp, fp, fn = len(pred & true), len(pred - true), len(true - pred)
+        pr = tp / (tp + fp) if tp + fp else 0.0
+        rc = tp / (tp + fn) if tp + fn else 0.0
+        f1 = 2 * pr * rc / (pr + rc) if pr * rc > 0 else 0.0
+
+        m = pipeline.evaluate_against_truth(
+            spark.createDataFrame(assignment, "record_id long, component_id long"),
+            spark.createDataFrame(truth, "url string, entity_id long"),
+        ).collect()[0]
+        assert (m["tp"], m["fp"], m["fn"]) == (tp, fp, fn), trial
+        assert (m["precision"], m["recall"], m["f1"]) == (pr, rc, f1), trial

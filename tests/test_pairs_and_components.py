@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import functions as F
 
 from entity_resolution_spark.operators import blocking, components, pairs
@@ -162,3 +164,39 @@ def test_cc_durable_checkpoint_resume(spark, tmp_path):
     assert resumed == baseline
     resumed_rounds = sorted(p for p in os.listdir(d) if p.startswith("round_"))
     assert len(resumed_rounds) > 2 and resumed_rounds[2] == "round_0002"
+
+
+def _cc_labels(spark, edges):
+    e = spark.createDataFrame(
+        pd.DataFrame(edges, columns=["src", "dst"], dtype="int64"), "src long, dst long"
+    )
+    return {
+        (r["record_id"], r["component_id"])
+        for r in components.connected_components(e).collect()
+    }
+
+
+def test_cc_driver_finish_equals_distributed_rounds(spark, monkeypatch):
+    """Below the edge cap CC finishes on the driver; with the cap at 0 every
+    round runs in Spark.  Both give the same min-id labels on random graphs
+    over signed 64-bit ids, a chain and a 999-node clique (the hot-block
+    shape); no edges give no labels."""
+    rng = np.random.default_rng(7)
+    graphs = []
+    for _ in range(3):
+        n = int(rng.integers(5, 200))
+        ids = rng.choice(1 << 40, size=n, replace=False) - (1 << 39)
+        m = int(rng.integers(1, 2 * n))
+        graphs.append(
+            [(int(ids[a]), int(ids[b])) for a, b in rng.integers(0, n, size=(m, 2))]
+        )
+    graphs.append([(i + 1, i) for i in range(300)])
+    graphs.append(np.argwhere(np.triu(np.ones((999, 999), dtype=bool), 1)))
+
+    assert _cc_labels(spark, []) == set()
+    driver = [_cc_labels(spark, g) for g in graphs]
+    monkeypatch.setattr(components, "DRIVER_FINISH_EDGES", 0)
+    for g, got in zip(graphs, driver):
+        assert got == _cc_labels(spark, g)
+    assert driver[-2] == {(i, 0) for i in range(301)}
+    assert driver[-1] == {(i, 0) for i in range(999)}

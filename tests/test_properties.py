@@ -7,7 +7,7 @@ import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from entity_resolution_spark.functions.similarity import jaro_winkler_py
+from entity_resolution_spark.functions.similarity import jaro_winkler_py, jaro_winkler_udf
 from entity_resolution_spark.functions.text import extract_text_py
 from entity_resolution_spark.ml.kmeans import kmeans_fit_predict
 
@@ -21,6 +21,24 @@ def test_jaro_winkler_properties(a, b):
     assert 0.0 <= s <= 1.0
     assert jaro_winkler_py(b, a) == s            # symmetric
     assert jaro_winkler_py(a, a) == 1.0 or a == ""
+
+
+jw_text = st.one_of(
+    st.text(alphabet="ab\x00é\U0001d11e\U0001f600 ", max_size=6),
+    st.text(alphabet="abcé\x00\U0001d11e", max_size=40),
+    st.text(st.characters(exclude_categories=("Cs",)), max_size=300),
+)
+
+
+@given(st.lists(st.tuples(jw_text, jw_text), min_size=1, max_size=40))
+@settings(max_examples=25, deadline=None)
+def test_jaro_winkler_udf_bit_identical_to_reference(spark, rows):
+    """The numpy kernel over one Arrow batch of mixed lengths, NULs,
+    non-BMP characters and empty strings == the Python reference, exactly."""
+    rows = rows + [(a, a) for a, _ in rows[:3]] + [(a[:-1] + "a", a) for a, _ in rows[:3]]
+    df = spark.createDataFrame(rows, "s1 string, s2 string").coalesce(1)
+    got = [r[0] for r in df.select(jaro_winkler_udf("s1", "s2")).collect()]
+    assert got == [jaro_winkler_py(a, b) for a, b in rows]
 
 
 @given(st.binary(max_size=200))

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from entity_resolution_spark.functions.features import FeatureSpec
@@ -74,3 +75,5 @@ def test_cluster_embeddings_df(spark):
     assert len({labels[i] for i in range(5)}) == 1
     assert len({labels[i] for i in range(5, 10)}) == 1
     assert labels[0] != labels[9]
+    with pytest.raises(ValueError, match="max_rows=9"):
+        cluster_embeddings_df(df, distance_threshold=1.0, max_rows=9)
