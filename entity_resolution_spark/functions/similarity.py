@@ -74,9 +74,26 @@ def jaro_winkler_py(s1: str, s2: str, p: float = 0.1) -> float:
     return j + prefix * p * (1.0 - j)
 
 
-# Rows per kernel call.  Rows are sorted by length first, so a chunk's
-# code-point matrices are padded only to its own longest string.
+# Rows per kernel call, and padded cells (rows x longest string squared) per
+# call.  Rows are sorted by length first, so a chunk is padded only to its own
+# longest string; the window loop makes about that many cell comparisons, so
+# the cell cap keeps one long string (a multi-KB <title>) from paying its
+# square once for every row of a full chunk.
 _JW_CHUNK_ROWS = 2048
+_JW_CHUNK_CELLS = 1 << 23
+
+
+def _jw_chunks(lengths: np.ndarray):
+    """[start, end) chunks over ascending ``lengths``: at most
+    ``_JW_CHUNK_ROWS`` rows and ``_JW_CHUNK_CELLS`` padded cells each, and
+    at least one row."""
+    start = 0
+    while start < len(lengths):
+        head = lengths[start : start + _JW_CHUNK_ROWS].astype(np.float64)
+        cells = np.arange(1, len(head) + 1) * np.maximum(head, 1.0) ** 2
+        end = start + max(1, int(np.searchsorted(cells, _JW_CHUNK_CELLS, side="right")))
+        yield start, end
+        start = end
 
 
 def _code_points(strs: np.ndarray, width: int) -> np.ndarray:
@@ -137,9 +154,11 @@ def jaro_winkler_udf(s1: pd.Series, s2: pd.Series) -> pd.Series:
     n2 = np.fromiter(map(len, b), dtype=np.int64, count=len(b))
     out = np.ones(len(a))
     differ = np.flatnonzero(a != b)
-    order = differ[np.argsort(np.maximum(n1, n2)[differ], kind="stable")]
-    for start in range(0, len(order), _JW_CHUNK_ROWS):
-        idx = order[start : start + _JW_CHUNK_ROWS]
+    longest = np.maximum(n1, n2)[differ]
+    rank = np.argsort(longest, kind="stable")
+    order = differ[rank]
+    for start, end in _jw_chunks(longest[rank]):
+        idx = order[start:end]
         out[idx] = _jaro_winkler_chunk(a[idx], b[idx], n1[idx], n2[idx])
     return pd.Series(out, index=s1.index)
 

@@ -81,7 +81,11 @@ def _checksum(edges: DataFrame) -> tuple[int, int]:
 
 
 # Edge count at or below which CC finishes on the driver: 4M int64 pairs are
-# 64 MB through Arrow, and the union-find labels them in about a second.
+# 64 MB through Arrow.  Measured end to end at the cap on local[4] (shared
+# 4-vCPU Intel Xeon VM, get_spark defaults): a clique took 6.1 s on the
+# driver against 8.6 s of distributed rounds, a sparse random graph (2^22
+# edges over 2^22 ids) 8.8 s against 371 s; the union-find alone took 0.7 s
+# and 2.4 s.  The driver finish also won at 2^19, 2^20 and 2^21 edges.
 DRIVER_FINISH_EDGES = 1 << 22
 
 

@@ -180,7 +180,9 @@ def test_cc_driver_finish_equals_distributed_rounds(spark, monkeypatch):
     """Below the edge cap CC finishes on the driver; with the cap at 0 every
     round runs in Spark.  Both give the same min-id labels on random graphs
     over signed 64-bit ids, a chain and a 999-node clique (the hot-block
-    shape); no edges give no labels."""
+    shape); no edges give no labels.  With the cap between the clique's
+    498,501 edges and its size after one star round, the large-graph path
+    runs: distributed rounds first, then the driver finish."""
     rng = np.random.default_rng(7)
     graphs = []
     for _ in range(3):
@@ -200,3 +202,13 @@ def test_cc_driver_finish_equals_distributed_rounds(spark, monkeypatch):
         assert got == _cc_labels(spark, g)
     assert driver[-2] == {(i, 0) for i in range(301)}
     assert driver[-1] == {(i, 0) for i in range(999)}
+
+    calls = []
+    for name in ("_large_star", "_driver_finish"):
+        orig = getattr(components, name)
+        monkeypatch.setattr(
+            components, name, lambda e, orig=orig, name=name: calls.append(name) or orig(e)
+        )
+    monkeypatch.setattr(components, "DRIVER_FINISH_EDGES", 10_000)
+    assert _cc_labels(spark, graphs[-1]) == driver[-1]
+    assert calls[0] == "_large_star" and calls[-1] == "_driver_finish"

@@ -7,7 +7,13 @@ import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from entity_resolution_spark.functions.similarity import jaro_winkler_py, jaro_winkler_udf
+from entity_resolution_spark.functions.similarity import (
+    _JW_CHUNK_CELLS,
+    _JW_CHUNK_ROWS,
+    _jw_chunks,
+    jaro_winkler_py,
+    jaro_winkler_udf,
+)
 from entity_resolution_spark.functions.text import extract_text_py
 from entity_resolution_spark.ml.kmeans import kmeans_fit_predict
 
@@ -34,11 +40,29 @@ jw_text = st.one_of(
 @settings(max_examples=25, deadline=None)
 def test_jaro_winkler_udf_bit_identical_to_reference(spark, rows):
     """The numpy kernel over one Arrow batch of mixed lengths, NULs,
-    non-BMP characters and empty strings == the Python reference, exactly."""
+    non-BMP characters and empty strings == the Python reference, exactly.
+    Two rows carry a ~2000-character title, so the batch spans several
+    cell-capped chunks."""
     rows = rows + [(a, a) for a, _ in rows[:3]] + [(a[:-1] + "a", a) for a, _ in rows[:3]]
+    big = ("x" + rows[0][0]) * (2000 // (len(rows[0][0]) + 1) + 1)
+    rows = rows + [(big, big[::-1]), (rows[-1][1], big[1:])]
     df = spark.createDataFrame(rows, "s1 string, s2 string").coalesce(1)
     got = [r[0] for r in df.select(jaro_winkler_udf("s1", "s2")).collect()]
     assert got == [jaro_winkler_py(a, b) for a, b in rows]
+
+
+@given(st.lists(st.integers(0, 5000), max_size=3000))
+@settings(max_examples=50, deadline=None)
+def test_jw_chunks_cover_rows_within_caps(lengths):
+    """Chunks tile the length-sorted rows in order; each holds at most the
+    row cap and, unless it is a single row, at most the cell cap."""
+    L = np.sort(np.array(lengths, dtype=np.int64))
+    chunks = list(_jw_chunks(L))
+    bounds = [0] + [e for _, e in chunks]
+    assert [s for s, _ in chunks] == bounds[:-1] and bounds[-1] == len(L)
+    for s, e in chunks:
+        assert 1 <= e - s <= _JW_CHUNK_ROWS
+        assert e - s == 1 or (e - s) * max(int(L[e - 1]), 1) ** 2 <= _JW_CHUNK_CELLS
 
 
 @given(st.binary(max_size=200))

@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from entity_resolution_spark.functions.features import FeatureSpec
+from entity_resolution_spark.ml import hierarchical
 from entity_resolution_spark.ml.hierarchical import cluster_embeddings_df
 from entity_resolution_spark.ml.optimize import optimize_weights
 from entity_resolution_spark.operators import blocking, components, klsh, pairs
@@ -64,7 +65,7 @@ def test_weight_opt_on_spark_klsh(spark):
     assert len(wg) == 9 and vg <= 0.0
 
 
-def test_cluster_embeddings_df(spark):
+def test_cluster_embeddings_df(spark, monkeypatch):
     rng = np.random.default_rng(5)
     a = rng.normal(0, 0.02, size=(5, 8))
     b = rng.normal(0, 0.02, size=(5, 8)) + 3.0
@@ -75,5 +76,6 @@ def test_cluster_embeddings_df(spark):
     assert len({labels[i] for i in range(5)}) == 1
     assert len({labels[i] for i in range(5, 10)}) == 1
     assert labels[0] != labels[9]
-    with pytest.raises(ValueError, match="max_rows=9"):
-        cluster_embeddings_df(df, distance_threshold=1.0, max_rows=9)
+    monkeypatch.setattr(hierarchical, "WARD_MAX_ROWS", 9)
+    with pytest.raises(ValueError, match="WARD_MAX_ROWS=9"):
+        cluster_embeddings_df(df, distance_threshold=1.0)
