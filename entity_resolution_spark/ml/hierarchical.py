@@ -57,8 +57,8 @@ def ward_labels(X: np.ndarray, distance_threshold: float = 0.2) -> np.ndarray:
 
 # Most embeddings ``cluster_embeddings_df`` collects.  ``ward_labels`` is
 # O(n^3) pure Python: when every merge is under the threshold it takes about
-# 0.8 s at 100 rows, 7 s at 200 and 23 s at 300 (one core of a shared 4-vCPU
-# Intel Xeon VM), so 256 rows bound the driver step to about 15 s.
+# 1 s at 100 rows, 7.5 s at 200, 16 s at 256 and 26 s at 300 (one core of a
+# shared 4-vCPU Intel Xeon VM), so the cap bounds the driver step to ~16 s.
 WARD_MAX_ROWS = 256
 
 
