@@ -913,7 +913,6 @@ def q_prepared_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
             boiler_min_docs=5,
             min_quality=0.3,
             keep_langs=("en",),
-            max_ce_micro=None,
             jaccard_threshold=0.8,
             mix_rates=rates,
             mix_default_rate=0.0,

@@ -59,25 +59,6 @@ def zscore_per_group(col: Column, group_col: str) -> Column:
     return F.when(std > 0, (col - mean) / std).otherwise(F.lit(0.0))
 
 
-def minmax_neg1_1(col: Column, group_col: str | None = None) -> Column:
-    """MinMax scale to [-1, 1] (encoder pipeline, ``feature_engineering.py:58-64``)."""
-    w = Window.partitionBy(group_col) if group_col else Window.partitionBy()
-    lo, hi = F.min(col).over(w), F.max(col).over(w)
-    return F.when(hi > lo, F.lit(-1.0) + 2.0 * (col - lo) / (hi - lo)).otherwise(F.lit(0.0))
-
-
-def keyed_noise(id_col: Column, scale: float = 0.05, seed: int = 42) -> Column:
-    """Deterministic pseudo-Gaussian noise keyed by record id (replaces the
-    reference's ``np.random.normal`` train-time noise so results don't depend
-    on partitioning).  Sum of 4 keyed uniforms ≈ normal (Irwin-Hall)."""
-    us = [
-        (F.pmod(F.xxhash64(id_col, F.lit(seed + i)), F.lit(100003)) / F.lit(100003.0))
-        for i in range(4)
-    ]
-    ih = sum(us, F.lit(0.0).cast("double")) - F.lit(2.0)  # mean 0, var 1/3
-    return ih * F.lit(scale * math.sqrt(3.0))
-
-
 def iqr_outlier_report(
     df: DataFrame,
     cols: list[str],
@@ -89,18 +70,25 @@ def iqr_outlier_report(
     logs and ignores: ``feature_engineering.py:141-142,170-193``).
 
     Exact interpolated percentiles (``F.percentile``) so the SQL oracle
-    (quantile_cont) reproduces the numbers; one aggregation per column batch.
+    (quantile_cont) reproduces the numbers.  Two Spark jobs for any number of
+    columns: one aggregation of every percentile, then one of every
+    column's outlier count.
     """
-    rows = []
-    for c in cols:
-        q = df.agg(
-            F.percentile(F.col(c), F.lit(lower_q)).alias("lo_q"),
-            F.percentile(F.col(c), F.lit(upper_q)).alias("hi_q"),
-        ).collect()[0]
-        iqr = q["hi_q"] - q["lo_q"]
-        lo, hi = q["lo_q"] - k * iqr, q["hi_q"] + k * iqr
-        n_out = df.where((F.col(c) < lo) | (F.col(c) > hi)).count()
-        rows.append((c, float(round(lo, 6)), float(round(hi, 6)), int(n_out)))
+    qs = df.agg(
+        *[F.percentile(F.col(c), F.lit(q)) for c in cols for q in (lower_q, upper_q)]
+    ).collect()[0]
+    bounds = []
+    for i, c in enumerate(cols):
+        lo_q, hi_q = qs[2 * i], qs[2 * i + 1]
+        iqr = hi_q - lo_q
+        bounds.append((c, lo_q - k * iqr, hi_q + k * iqr))
+    counts = df.agg(
+        *[F.count(F.when((F.col(c) < lo) | (F.col(c) > hi), 1)) for c, lo, hi in bounds]
+    ).collect()[0]
+    rows = [
+        (c, float(round(lo, 6)), float(round(hi, 6)), int(n))
+        for (c, lo, hi), n in zip(bounds, counts)
+    ]
     return df.sparkSession.createDataFrame(
         rows, "feature string, lower_bound double, upper_bound double, n_outliers long"
     )

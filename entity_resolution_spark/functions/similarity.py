@@ -223,7 +223,6 @@ def tfidf_vectors(
     id_col: str = "record_id",
     text_col: str = "text",
     num_features: int | None = 1 << 18,
-    materialize: bool = False,
 ) -> DataFrame:
     """(id, term_key, tfidf_weight) long form, L2-normalized per document.
 
@@ -232,14 +231,6 @@ def tfidf_vectors(
     scoring is a join on term_key.  ``num_features`` hashes terms into that
     many buckets (the scale path: fixed-width ids, shorter join keys);
     ``None`` keeps raw term strings (exact, and oracle-reproducible in SQL).
-
-    ``materialize`` checkpoints the tf table (referenced by both the df
-    aggregation and the weighting join) and the returned vectors (referenced
-    by both sides of the pair-scoring join).  Default off: the long-form tf
-    table is large relative to its compute, and re-running the codegen'd
-    explode+agg per reference measures cheaper than store-and-reread at
-    sf0.1 — flip on when the weighting chain feeds many more than two
-    consumers.
     """
     terms = docs.select(
         F.col(id_col).alias("id"),
@@ -255,8 +246,6 @@ def tfidf_vectors(
         else F.col("term")
     )
     tf = terms.groupBy("id", key.alias("term_key")).agg(F.count("*").alias("tf"))
-    if materialize:
-        tf = tf.localCheckpoint(eager=False)
     n_docs = docs.select(F.countDistinct(id_col).alias("n")).collect()[0]["n"]
     df_tbl = tf.groupBy("term_key").agg(F.countDistinct("id").alias("df"))
     idf = df_tbl.select(
@@ -267,10 +256,9 @@ def tfidf_vectors(
         "id", "term_key", (F.col("tf") * F.col("idf")).alias("w")
     )
     norms = weighted.groupBy("id").agg(F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("norm"))
-    out = weighted.join(norms, "id").select(
+    return weighted.join(norms, "id").select(
         "id", "term_key", (F.col("w") / F.col("norm")).alias("w")
     )
-    return out.localCheckpoint(eager=False) if materialize else out
 
 
 def tfidf_cosine_pairs(
@@ -278,15 +266,13 @@ def tfidf_cosine_pairs(
     vectors: DataFrame,
     id1: str = "id1",
     id2: str = "id2",
-    materialize: bool = True,
 ) -> DataFrame:
     """Add ``tfidf_cosine`` to a pair table via sparse-vector join-aggregate.
 
-    ``materialize`` checkpoints the pair table — it is referenced by the dot
-    aggregation AND the final left join, and is typically an expensive
+    The pair table is checkpointed: it is referenced by the dot aggregation
+    AND the final left join, and is typically an expensive
     blocking→weights→prune chain."""
-    if materialize:
-        pairs_df = pairs_df.localCheckpoint(eager=False)
+    pairs_df = pairs_df.localCheckpoint(eager=False)
     v1 = vectors.select(F.col("id").alias(id1), "term_key", F.col("w").alias("w1"))
     v2 = vectors.select(F.col("id").alias(id2), "term_key", F.col("w").alias("w2"))
     dots = (

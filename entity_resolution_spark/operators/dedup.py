@@ -93,6 +93,11 @@ def minhash_signatures(
         if shingle
         else _tokens(docs, id_col, text_col)
     )
+    return _minhash_agg(units, id_col, num_hashes)
+
+
+def _minhash_agg(units: DataFrame, id_col: str, num_hashes: int) -> DataFrame:
+    """(id, tok) units → (id_col, h0..h{H-1}) per-id min of H seeded hashes."""
     aggs = [
         F.min(_md5_long(F.concat(F.lit(f"{i}_"), F.col("tok")))).alias(f"h{i}")
         for i in range(num_hashes)
@@ -105,7 +110,6 @@ def minhash_band_pairs(
     id_col: str = "doc_id",
     bands: int = 4,
     rows_per_band: int = 2,
-    materialize: bool = True,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """LSH banding join → distinct candidate (id1, id2) pairs.
@@ -115,11 +119,11 @@ def minhash_band_pairs(
     union branch per band (a per-band union re-evaluates the upstream
     signature subplan ``bands``× per join side).
 
-    ``materialize`` checkpoints the signature table before the self-join:
-    Spark does not reuse the build subplan across the two sides of a
-    broadcast self-join, so without it the (tokenize + H×md5 min-agg)
-    signature computation runs twice.  The signature table is 1 row/doc with
-    H longs — the cheapest point in the pipeline to cut lineage.
+    The signature table is checkpointed before the self-join: Spark does not
+    reuse the build subplan across the two sides of a broadcast self-join,
+    so without it the (tokenize + H×md5 min-agg) signature computation runs
+    twice.  The signature table is 1 row/doc with H longs — the cheapest
+    point in the pipeline to cut lineage.
 
     ``max_bucket_size`` purges buckets larger than the cap before the
     self-join — the same skew guard as block purging (G1): a bucket of b
@@ -131,8 +135,7 @@ def minhash_band_pairs(
     path); set at corpus scale where a near-universal bucket means "shared
     boilerplate", not "near-duplicate".
     """
-    if materialize:
-        signatures = signatures.localCheckpoint(eager=False)
+    signatures = signatures.localCheckpoint(eager=False)
     band_structs = F.array(
         *[
             F.struct(
@@ -248,21 +251,19 @@ def simhash_near_pairs(
     signatures: DataFrame,
     id_col: str = "doc_id",
     max_hamming: int = 3,
-    materialize: bool = True,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Candidates via band buckets (``max_hamming + 1`` contiguous bands ⇒
     pigeonhole guarantees any pair with Hamming ≤ max_hamming shares ≥ 1
     band), then exact Hamming filter.
 
-    ``materialize`` checkpoints the 1-row/doc signature table so the 64
-    per-bit sums aren't recomputed on both sides of the self-join.
+    The 1-row/doc signature table is checkpointed so the 64 per-bit sums
+    aren't recomputed on both sides of the self-join.
     ``max_bucket_size`` purges over-cap band buckets before the self-join
     (same boilerplate-skew guard as ``minhash_band_pairs``; purging trades
     the pigeonhole recall guarantee inside purged buckets for bounded
     candidate volume — default None keeps exact semantics)."""
-    if materialize:
-        signatures = signatures.localCheckpoint(eager=False)
+    signatures = signatures.localCheckpoint(eager=False)
     band_structs = F.array(
         *[
             F.struct(
@@ -309,7 +310,6 @@ def ngram_jaccard_pairs(
     text_col: str = "text",
     n: int = 3,
     round_to: int | None = 6,
-    materialize_shingles: bool = True,
 ) -> DataFrame:
     """Exact character-n-gram Jaccard for the given candidate pairs.
 
@@ -321,12 +321,9 @@ def ngram_jaccard_pairs(
     local[32], round 3: 15.3-15.5 s vs 18.5-18.6 s — reversing round 2's
     no-materialize choice, which round 2's own bench regression flagged).
     At cluster scale the same trade holds while the shingle table fits the
-    block managers' memory+disk tier; beyond that, set
-    ``materialize_shingles=False`` to trade recompute for storage."""
+    block managers' memory+disk tier."""
     pairs_df = pairs_df.localCheckpoint(eager=False)
-    sh = char_shingles(docs, id_col, text_col, n)
-    if materialize_shingles:
-        sh = sh.localCheckpoint(eager=False)
+    sh = char_shingles(docs, id_col, text_col, n).localCheckpoint(eager=False)
     sizes = sh.groupBy("id").agg(F.count("*").alias("n_sh"))
     s1 = sh.select(F.col("id").alias("id1"), "shingle")
     s2 = sh.select(F.col("id").alias("id2"), "shingle")
@@ -403,11 +400,7 @@ def dedup_keep_list(
     )
     # near: minhash bands → candidates → exact jaccard ≥ threshold
     tok = _tokens(docs, id_col, text_col).localCheckpoint(eager=False)
-    sig_aggs = [
-        F.min(_md5_long(F.concat(F.lit(f"{i}_"), F.col("tok")))).alias(f"h{i}")
-        for i in range(num_hashes)
-    ]
-    sig = tok.groupBy("id").agg(*sig_aggs).withColumnRenamed("id", id_col)
+    sig = _minhash_agg(tok, id_col, num_hashes)
     cands = minhash_band_pairs(sig, id_col, bands, num_hashes // bands)
     # length prefilter: J(a,b) <= min(|a|,|b|)/max(|a|,|b|), so pairs whose
     # token-set sizes differ by more than the threshold ratio cannot pass
@@ -599,7 +592,6 @@ def duplicated_spans(
     min_docs: int = 2,
     text_col: str = "text",
     id_col: str = "doc_id",
-    materialize_positions: bool = True,
     refine_boundaries: bool = False,
 ) -> DataFrame:
     """Maximal cross-document duplicated token spans (the removable-span
@@ -623,10 +615,10 @@ def duplicated_spans(
     PARTITIONED by doc (no global window).  Everything is O(total tokens)
     rows with map-side combine.
 
-    ``materialize_positions`` localCheckpoints the position/gram-hash table
-    before its two consumers (the dup aggregate and the coverage join) —
-    otherwise the tokenize+md5 projection runs twice; measured at sf0.1:
-    ~5.5 s vs ~9.2 s (A/B, 3 reps each, quiet local[32]).
+    The position/gram-hash table is localCheckpointed before its two
+    consumers (the dup aggregate and the coverage join) — otherwise the
+    tokenize+md5 projection runs twice; measured at sf0.1: ~5.5 s vs ~9.2 s
+    (A/B, 3 reps each, quiet local[32]).
 
     ``refine_boundaries`` closes the main approximation of plain L-gram
     islands: consecutive covered positions p and p+1 merge into one span
@@ -661,9 +653,7 @@ def duplicated_spans(
     pos = docs.select(
         F.col(id_col).alias("doc_id"),
         F.posexplode(gram_array(gram_tokens)).alias("pos", "gram_md5"),
-    )
-    if materialize_positions:
-        pos = pos.localCheckpoint(eager=False)
+    ).localCheckpoint(eager=False)
     dup = (
         pos.groupBy("gram_md5")
         .agg(F.count_distinct("doc_id").alias("nd"))
@@ -680,9 +670,7 @@ def duplicated_spans(
         pos2 = docs.select(
             F.col(id_col).alias("doc_id"),
             F.posexplode(gram_array(gram_tokens + 1)).alias("pos", "g2"),
-        )
-        if materialize_positions:
-            pos2 = pos2.localCheckpoint(eager=False)
+        ).localCheckpoint(eager=False)
         dup2 = (
             pos2.groupBy("g2")
             .agg(F.count_distinct("doc_id").alias("nd"))

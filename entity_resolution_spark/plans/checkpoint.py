@@ -104,28 +104,6 @@ def resolve_checkpointed(
     """The full ER pipeline with a checkpoint after every stage — restart the
     driver mid-run and completed stages are read back instead of recomputed.
     """
-    from ..operators import blocking as B
-    from ..operators import components as C
-    from ..operators import pairs as P
     from . import pipeline
 
-    cfg = cfg or pipeline.ERConfig()
-    recs = ckpt.stage(
-        "00_extract", lambda: pipeline.extract(pages).select("record_id", "url", "title")
-    )
-    blocks = ckpt.stage(
-        "01_block", lambda: B.block(recs, cfg.stages, max_block_size=cfg.max_block_size)
-    )
-    edges = ckpt.stage(
-        "02_edges",
-        lambda: P.edge_weights(blocks, with_provenance=cfg.with_provenance),
-    )
-    pruned = ckpt.stage("03_pruned", lambda: P.prune(edges, cfg.prune_threshold))
-    assignment = ckpt.stage(
-        "04_components",
-        lambda: C.assign_components(
-            recs.select("record_id"),
-            pruned.select(F.col("id1").alias("src"), F.col("id2").alias("dst")),
-        ),
-    )
-    return recs.select("record_id", "url").join(assignment, "record_id")
+    return pipeline.stage_graph(pages, cfg or pipeline.ERConfig(), ckpt.stage)

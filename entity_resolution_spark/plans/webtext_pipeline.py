@@ -6,7 +6,7 @@ preparation flow (CCNet / RefinedWeb / Lee et al. order of operations):
     raw crawl (url, warc_ts, doc_id, page)
       1. URL canonicalization + latest-snapshot compaction   (cheapest first)
       2. line-level boilerplate removal (per-site recurring lines)
-      3. quality + language heuristics, LM cross-entropy signal
+      3. quality + language heuristics
       4. near-duplicate removal (exact + MinHash-LSH keep-list)
       5. deterministic stratified training-mix sampling
 
@@ -31,7 +31,6 @@ from pyspark.sql import DataFrame, functions as F
 from ..functions.text import lang_guess, quality_score
 from ..functions.urls import canonical_url
 from ..operators.dedup import dedup_keep_list
-from ..operators.lm import bigram_cross_entropy
 from ..operators.relational import latest_snapshot_per_key
 from ..operators.sampling import hash_stratified_sample
 from ..operators.webtext import strip_boilerplate
@@ -42,18 +41,10 @@ class WebtextConfig:
     boiler_min_docs: int = 5
     min_quality: float = 0.3
     keep_langs: tuple[str, ...] = ("en",)
-    max_ce_micro: int | None = None  # LM tail cut; None disables
     jaccard_threshold: float = 0.8
     mix_rates: dict[str, float] = field(default_factory=dict)
     mix_salt: str = "mix-v1"
     mix_default_rate: float = 1.0
-    #: Materialize each stage boundary (localCheckpoint).  Without this,
-    #: every self-join downstream (LSH candidate generation, the LM's four
-    #: reads of the token table) re-expands the whole upstream subtree —
-    #: measured on this plan: 278 Exchanges / 116 SortMergeJoins unchecked
-    #: vs ~20/~15 materialized.  A cluster deployment would swap
-    #: localCheckpoint for plans/checkpoint.py parquet snapshots (durable).
-    materialize_stages: bool = True
 
 
 def compact_crawl(pages: DataFrame) -> DataFrame:
@@ -86,21 +77,14 @@ def clean_pages(compacted: DataFrame, cfg: WebtextConfig) -> DataFrame:
 
 
 def signal_filter(cleaned: DataFrame, cfg: WebtextConfig) -> DataFrame:
-    """Stage 3: heuristic quality, language ID, and (optionally) the
-    corpus-LM cross-entropy tail cut.  Rounds the quality score to 6dp
-    before thresholding (repo round-before-threshold rule)."""
+    """Stage 3: heuristic quality and language ID.  Rounds the quality score
+    to 6dp before thresholding (repo round-before-threshold rule)."""
     sig = cleaned.withColumn(
         "quality", F.round(quality_score(F.col("text")), 6)
     ).withColumn("lang_pred", lang_guess(F.col("text")))
     keep = (F.col("quality") >= cfg.min_quality) & F.col("lang_pred").isin(
         *cfg.keep_langs
     )
-    if cfg.max_ce_micro is not None:
-        ce = bigram_cross_entropy(sig)
-        sig = sig.join(ce.select("doc_id", "ce_micro"), "doc_id", "left")
-        keep = keep & (
-            F.coalesce(F.col("ce_micro"), F.lit(0)) <= cfg.max_ce_micro
-        )
     return sig.where(keep)
 
 
@@ -133,11 +117,17 @@ def prepare_corpus(pages: DataFrame, cfg: WebtextConfig | None = None) -> DataFr
     """The full pipeline.  Input columns: url, warc_ts, doc_id, source,
     page.  Output: one row per kept training document —
     (doc_id, canonical_url, n_versions, source, text, n_boiler, quality,
-    lang_pred[, ce_micro])."""
+    lang_pred)."""
     cfg = cfg or WebtextConfig()
 
     def cut(df: DataFrame) -> DataFrame:
-        return df.localCheckpoint(eager=False) if cfg.materialize_stages else df
+        # Materialize each stage boundary.  Without it, every self-join
+        # downstream (LSH candidate generation) re-expands the whole
+        # upstream subtree — measured on this plan: 278 Exchanges / 116
+        # SortMergeJoins unchecked vs ~20/~15 materialized.  A cluster
+        # deployment would swap localCheckpoint for plans/checkpoint.py
+        # parquet snapshots (durable).
+        return df.localCheckpoint(eager=False)
 
     compacted = cut(compact_crawl(pages))
     cleaned = cut(clean_pages(compacted, cfg))

@@ -22,7 +22,9 @@ So per batch it suffices to generate pairs inside touched blocks, keep those
 involving ≥1 batch record, weight+prune them, and append (re-emitting a pair
 at a higher weight is harmless — components use edges as a set).  Component
 ids are min-record-id, hence deterministic regardless of arrival order — the
-final assignment equals the batch pipeline's on the same cumulative input.
+final assignment equals the batch pipeline's on the same cumulative input,
+as long as no block exceeds ``ERConfig.max_block_size``: the batch pipeline
+purges such blocks, and this path purges none.
 """
 
 from __future__ import annotations

@@ -179,7 +179,9 @@ def _sessionize_fn(
         last = max(last, t)
         n += 1
     state.update((int(start), int(last), int(n)))
-    state.setTimeoutDuration(gap_s * 1000)
+    # event-time timeout: the session closes once the watermark passes its
+    # end, so an availableNow query stops scheduling batches and ends
+    state.setTimeoutTimestamp((int(last) + gap_s) * 1000)
     if out:
         yield pd.DataFrame(
             {
@@ -202,7 +204,7 @@ def sessionize(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
             outputStructType=SESSION_SCHEMA,
             stateStructType=_STATE_SCHEMA,
             outputMode="append",
-            timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+            timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
     )
 

@@ -21,11 +21,13 @@ the other sections show.
 from __future__ import annotations
 
 import io
+import os
 import re
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 # Scan allow-lists: default per table; per-query overrides where the query
 # legitimately needs more columns.
@@ -157,7 +159,7 @@ def main() -> None:
             + ("- **FAIL**: " + "; ".join(notes) + "\n" if notes else "- checks: OK\n")
         )
     spark.stop()
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write("\n".join(report))
     if failures:
         print("PLAN AUDIT FAILURES:")

@@ -80,9 +80,6 @@ def test_extract_text_total_and_deterministic(data):
 def test_union_find_oracle_properties(edges):
     """The pandas-oracle union-find used in parity tests is itself verified:
     same-component iff connected (BFS ground truth)."""
-    import sys
-
-    sys.path.insert(0, "/root/repo/tests")
     from pandas_oracle import components_py
 
     nodes = sorted({v for e in edges for v in e} | {99})
@@ -126,9 +123,6 @@ def test_kmeans_properties(k, n, seed):
 
 def test_spark_cc_vs_union_find_randomized(spark):
     """5 random graphs: large/small-star CC == union-find oracle."""
-    import sys
-
-    sys.path.insert(0, "/root/repo/tests")
     from pandas_oracle import components_py
 
     from entity_resolution_spark.operators import components

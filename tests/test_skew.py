@@ -292,3 +292,30 @@ def test_aqe_skew_join_splits_planted_hot_partition(spark):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+def test_resolve_and_checkpointed_share_salted_stage_graph(spark, tmp_path, monkeypatch):
+    """Both entry points build the same stage graph: each honours
+    ``salt_buckets`` and they return the same assignment."""
+    from entity_resolution_spark.plans.checkpoint import (
+        StageCheckpointer,
+        resolve_checkpointed,
+    )
+
+    calls = []
+    salted = pairs.candidate_pairs_salted
+
+    def spy(*args, **kwargs):
+        calls.append(1)
+        return salted(*args, **kwargs)
+
+    monkeypatch.setattr(pairs, "candidate_pairs_salted", spy)
+    corpus = make_pages(n_entities=30, hot_key_rows=100)
+    pages = spark.createDataFrame(corpus.pages)
+    cfg = pipeline.ERConfig(salt_buckets=8)
+    plain = sorted(map(tuple, pipeline.resolve(pages, cfg).collect()))
+    assert len(calls) == 1
+    ckpt = StageCheckpointer(spark, str(tmp_path), "salted")
+    checkpointed = sorted(map(tuple, resolve_checkpointed(pages, ckpt, cfg).collect()))
+    assert len(calls) == 2
+    assert plain == checkpointed

@@ -10,6 +10,7 @@ import sys
 import pytest
 
 SPARK_SUBMIT = "/opt/spark/bin/spark-submit"
+SCRIPTS = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scripts")
 
 
 @pytest.mark.skipif(not os.path.exists(SPARK_SUBMIT), reason="no spark-submit")
@@ -22,7 +23,7 @@ def test_spark_submit_pyfiles(spark, tmp_path):
 
     zip_path = str(tmp_path / "pkg.zip")
     subprocess.run(
-        [sys.executable, "/root/repo/scripts/build_pyfiles_zip.py", zip_path],
+        [sys.executable, os.path.join(SCRIPTS, "build_pyfiles_zip.py"), zip_path],
         check=True,
         capture_output=True,
     )
@@ -31,7 +32,7 @@ def test_spark_submit_pyfiles(spark, tmp_path):
             SPARK_SUBMIT,
             "--master", "local[4]",
             "--py-files", zip_path,
-            "/root/repo/scripts/submit_pipeline.py",
+            os.path.join(SCRIPTS, "submit_pipeline.py"),
             str(pages_dir),
             str(tmp_path / "out"),
             str(tmp_path / "ckpt"),

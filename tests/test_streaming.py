@@ -30,7 +30,7 @@ def _run_to_memory(df, name):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120), f"{name} did not terminate within 120 s"
     return q
 
 
