@@ -687,9 +687,7 @@ def run_reference_compare(sf_dir: str, reps: int = 8) -> None:
     blocks = blocks.repartition(64).localCheckpoint()
     P.candidate_pairs(bb.limit(1000)).count()  # warm
     t0 = time.perf_counter()
-    pr = P.prune(
-        P.edge_weights(blocks, left_partitions=64, broadcast_blocks=True)
-    ).localCheckpoint()
+    pr = P.prune(P.edge_weights(blocks, broadcast_blocks=True)).localCheckpoint()
     pr.count()
     C.assign_components(
         blocks.select("record_id").distinct(),

@@ -74,20 +74,10 @@ def _title(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _par(spark: SparkSession) -> int:
-    return spark.sparkContext.defaultParallelism
-
-
 def _edges(spark: SparkSession, sf_dir: str, **kw) -> DataFrame:
-    """Shared meta-blocked edge table with pair generation spread over all
-    cores (testdata parquet arrives in 1 partition; without the explicit
-    repartition the quadratic self-join runs in one task)."""
-    return pairs.edge_weights(
-        _blocks(spark, sf_dir),
-        left_partitions=2 * _par(spark),
-        broadcast_blocks=True,
-        **kw,
-    )
+    """Shared meta-blocked edge table (``candidate_pairs`` spreads the
+    quadratic self-join over all cores)."""
+    return pairs.edge_weights(_blocks(spark, sf_dir), broadcast_blocks=True, **kw)
 
 
 def _blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -162,12 +152,7 @@ def q_block_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:  # G1
 
 
 def q_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:  # G2
-    return pairs.candidate_pairs(
-        _blocks(spark, sf_dir),
-        distinct=True,
-        left_partitions=2 * _par(spark),
-        broadcast_blocks=True,
-    )
+    return pairs.candidate_pairs(_blocks(spark, sf_dir), distinct=True, broadcast_blocks=True)
 
 
 def q_edge_weights(spark: SparkSession, sf_dir: str) -> DataFrame:  # G3

@@ -246,7 +246,8 @@ def tfidf_vectors(
         else F.col("term")
     )
     tf = terms.groupBy("id", key.alias("term_key")).agg(F.count("*").alias("tf"))
-    n_docs = docs.select(F.countDistinct(id_col).alias("n")).collect()[0]["n"]
+    # N is a scalar subquery of the plan, so building the vectors runs no job
+    n_docs = docs.select(F.countDistinct(id_col)).scalar()
     df_tbl = tf.groupBy("term_key").agg(F.countDistinct("id").alias("df"))
     idf = df_tbl.select(
         "term_key",

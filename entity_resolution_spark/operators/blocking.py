@@ -98,16 +98,14 @@ def block(
     ).distinct()  # frozenset semantics: one membership per (record, key)
 
     if max_block_size is not None:
-        # Block purging: one extra hash-agg + broadcast-able semi join on the
-        # surviving keys. At web scale the purged-key table is small (only keys
-        # OVER the cap are listed), so broadcast the anti side instead.
-        oversized = (
-            blocks.groupBy("block_key")
-            .agg(F.count("*").alias("block_size"))
-            .where(F.col("block_size") > F.lit(max_block_size))
-            .select("block_key")
-        )
-        blocks = blocks.join(F.broadcast(oversized), "block_key", "left_anti")
+        # Block purging: a map-side-combinable count per key, joined back and
+        # filtered.  An inner join keeps both reads of ``blocks`` above the
+        # same distinct, so its exchange (and the extract UDF below it) runs
+        # once; Spark pushes a left_anti join below the distinct instead and
+        # computes the table twice.  Not a Window count: that buffers a whole
+        # hot block in one task, which is what the purge exists to prevent.
+        kept = block_sizes(blocks).where(F.col("block_size") <= F.lit(max_block_size))
+        blocks = blocks.join(kept, "block_key").select("record_id", "block_key")
     return blocks
 
 

@@ -11,16 +11,8 @@ precision*recall == 0.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def _pair_count(df: DataFrame, *clusters: str) -> DataFrame:
-    """One row: Σ C(n,2) over the groups of ``clusters``, in exact integers."""
-    n = F.col("count")
-    return df.groupBy(*clusters).count().agg(
-        F.coalesce(F.shiftright(F.sum(n * (n - 1)), 1), F.lit(0)).alias("pairs")
-    )
 
 
 def cluster_pair_metrics(pred: DataFrame, true: DataFrame) -> DataFrame:
@@ -33,25 +25,35 @@ def cluster_pair_metrics(pred: DataFrame, true: DataFrame) -> DataFrame:
     * tp = Σ C(n,2) over (pred, true) cells of records on both sides;
     * fp = Σ_pred C(n,2) − tp;
     * fn = Σ_true C(n,2) − tp.
+
+    One pass: a full outer join of the two sides, one ``cube`` of cell
+    counts, and one aggregation that splits the cube's grouping sets by
+    ``grouping_id`` (0: cells, 1: pred clusters, 2: true clusters).  A null
+    cluster inside a grouping set is a record missing from that side.
     """
 
     def clean(df: DataFrame) -> DataFrame:
         return df.select("record_id", "cluster").dropna().distinct()
 
-    p, t = clean(pred), clean(true)
-    tp = _pair_count(
-        p.join(t.withColumnRenamed("cluster", "true_cluster"), "record_id"),
-        "cluster",
-        "true_cluster",
-    ).select(F.col("pairs").alias("tp"))
-    counts = (
-        tp.crossJoin(_pair_count(p, "cluster").select(F.col("pairs").alias("np")))
-        .crossJoin(_pair_count(t, "cluster").select(F.col("pairs").alias("nt")))
-        .select(
-            "tp",
-            (F.col("np") - F.col("tp")).alias("fp"),
-            (F.col("nt") - F.col("tp")).alias("fn"),
-        )
+    c, t, g, n = F.col("c"), F.col("t"), F.col("g"), F.col("n")
+    cells = (
+        clean(pred).withColumnRenamed("cluster", "c")
+        .join(clean(true).withColumnRenamed("cluster", "t"), "record_id", "full_outer")
+        .cube("c", "t")
+        .agg(F.count("*").alias("n"), F.grouping_id().alias("g"))
+    )
+
+    def pairs(where) -> Column:
+        return F.coalesce(F.shiftright(F.sum(F.when(where, n * (n - 1))), 1), F.lit(0))
+
+    counts = cells.agg(
+        pairs((g == 0) & c.isNotNull() & t.isNotNull()).alias("tp"),
+        pairs((g == 1) & c.isNotNull()).alias("np"),
+        pairs((g == 2) & t.isNotNull()).alias("nt"),
+    ).select(
+        "tp",
+        (F.col("np") - F.col("tp")).alias("fp"),
+        (F.col("nt") - F.col("tp")).alias("fn"),
     )
     return counts.select(
         "tp",

@@ -14,8 +14,9 @@ Reference semantics (``block_klsh/blocking/block_tree.py:161-225``):
 * prune: keep weight > threshold (default 1.5 ⇒ co-occur in ≥2 blocks,
   ``block_tree.py:213``, threshold ``config.py:23``).
 
-Scale notes: the self-join shuffles both sides on ``block_key`` once; pair
-counting is a map-side-combinable hash agg on (src,dst).  Skew: oversized
+Scale notes: the probe side of the self-join is hash-partitioned by
+``record_id``, so pair generation runs on every core; pair counting is a
+map-side-combinable hash agg on (id1, id2).  Skew: oversized
 blocks are purged upstream (``blocking.block``); residual intra-cap skew is
 split at runtime by AQE's skew-join.  An optional ``salt_buckets`` performs
 explicit triangle-salting of the self-join for clusters where AQE is
@@ -34,7 +35,6 @@ PRUNE_THRESHOLD = 1.5  # reference block_klsh/config.py:23
 def candidate_pairs(
     blocks: DataFrame,
     distinct: bool = True,
-    left_partitions: int | None = None,
     broadcast_blocks: bool = False,
 ) -> DataFrame:
     """All i<j pairs within each block: (id1, id2[, block_key]).
@@ -42,21 +42,21 @@ def candidate_pairs(
     With ``distinct=True`` collapses multi-block duplicates → the candidate
     set; with ``distinct=False`` keeps one row per (pair, block) for weighting.
 
-    Physical knobs (explicit per north_rule):
+    The probe side is hash-partitioned by ``record_id`` over the session's
+    default parallelism.  A small block table otherwise arrives in one
+    partition (a narrow scan, or AQE coalescing it) and the whole quadratic
+    pair generation runs in one task.  Hashing by ``record_id`` rather than
+    round-robin keeps every (pair, block) row of a pair — one per shared
+    block — in one task, so ``edge_weights``' partial aggregation still
+    combines them; with a broadcast build side, ``id1`` keeps that
+    partitioning and the (id1, id2) aggregation needs no further shuffle.
 
-    * ``left_partitions`` — round-robin repartition of the probe side before
-      the join.  A narrow parquet scan otherwise yields 1-2 input partitions
-      and the whole quadratic pair generation runs in as many tasks; with a
-      broadcast build side, per-row work is spread evenly over all cores and
-      hot blocks cost no more than their share of rows.
-    * ``broadcast_blocks`` — broadcast the build side (valid when the block
-      table fits the broadcast threshold; at larger scale leave False and use
-      ``candidate_pairs_salted`` for skew).
+    ``broadcast_blocks`` broadcasts the build side (valid when the block
+    table fits the broadcast threshold; at larger scale leave False and use
+    ``candidate_pairs_salted`` for skew).
     """
-    left = blocks
-    if left_partitions:
-        left = left.repartition(left_partitions)
-    left = left.alias("l")
+    n = blocks.sparkSession.sparkContext.defaultParallelism
+    left = blocks.repartition(n, "record_id").alias("l")
     right = F.broadcast(blocks) if broadcast_blocks else blocks
     right = right.alias("r")
     pairs = (
@@ -114,7 +114,6 @@ def edge_weights(
     blocks: DataFrame,
     with_provenance: bool = False,
     salt_buckets: int | None = None,
-    left_partitions: int | None = None,
     broadcast_blocks: bool = False,
 ) -> DataFrame:
     """Meta-blocking: (id1, id2, weight[, provenance]).
@@ -123,19 +122,12 @@ def edge_weights(
     distinct per (record, key) upstream, so a plain count is the distinct-block
     count — no ``count_distinct`` shuffle-heavy path needed.
 
-    ``left_partitions``/``broadcast_blocks`` forward to ``candidate_pairs``
-    (spread the quadratic pair generation over all cores when the upstream
-    scan arrives in few partitions).
+    ``broadcast_blocks`` forwards to ``candidate_pairs``.
     """
     pairs = (
         candidate_pairs_salted(blocks, salt_buckets)
         if salt_buckets
-        else candidate_pairs(
-            blocks,
-            distinct=False,
-            left_partitions=left_partitions,
-            broadcast_blocks=broadcast_blocks,
-        )
+        else candidate_pairs(blocks, distinct=False, broadcast_blocks=broadcast_blocks)
     )
     aggs = [F.count("*").alias("weight")]
     if with_provenance:

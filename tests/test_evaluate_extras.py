@@ -4,6 +4,7 @@ pipeline determinism."""
 from __future__ import annotations
 
 import itertools
+import uuid
 
 import numpy as np
 from pyspark.sql import functions as F
@@ -138,3 +139,29 @@ def test_evaluate_against_truth_matches_pair_set_oracle(spark):
         ).collect()[0]
         assert (m["tp"], m["fp"], m["fn"]) == (tp, fp, fn), trial
         assert (m["precision"], m["recall"], m["f1"]) == (pr, rc, f1), trial
+
+
+def test_cluster_pair_metrics_runs_one_pass(spark):
+    """One join, one cube and one aggregation: at most 8 Spark jobs under
+    AQE (each shuffle map stage is a job)."""
+    pred = spark.createDataFrame(
+        [(i, i // 4) for i in range(40)] + [(99, None)], "record_id long, cluster long"
+    )
+    true = spark.createDataFrame(
+        [(i, i // 5) for i in range(5, 45)], "record_id long, cluster long"
+    )
+    sc = spark.sparkContext
+    group = f"cpm-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "cluster_pair_metrics")
+    try:
+        m = evaluate.cluster_pair_metrics(pred, true).collect()[0]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 8
+    pred_pairs = _pair_set([(i, i // 4) for i in range(40)])
+    true_pairs = _pair_set([(i, i // 5) for i in range(5, 45)])
+    assert (m["tp"], m["fp"], m["fn"]) == (
+        len(pred_pairs & true_pairs),
+        len(pred_pairs - true_pairs),
+        len(true_pairs - pred_pairs),
+    )

@@ -2,9 +2,10 @@
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pandas as pd
-from pyspark.sql import functions as F
 
 from entity_resolution_spark.operators import blocking, components, pairs
 from entity_resolution_spark.operators.blocking import BlockingStage
@@ -90,23 +91,43 @@ def test_cc_star_and_deterministic_min_label(spark):
 
 
 def test_block_purging_drops_oversized(spark):
-    rows = [(i, "hot") for i in range(10)] + [(100, "cold"), (101, "cold")]
-    df = spark.createDataFrame(
-        [(i, k) for i, k in rows], ["record_id", "title"]
+    """``blocking.block(max_block_size=5)`` against a Python oracle: a key
+    over the cap is purged, a key exactly at the cap is kept, and a record
+    repeating a key counts once toward its block's size."""
+    rows = (
+        [(i, "hot") for i in range(10)]
+        + [(i, "edge") for i in range(20, 25)]
+        + [(20, "edge")]  # duplicate membership: "edge" still has 5 records
+        + [(100, "cold"), (101, "cold")]
     )
-    # build blocks directly to test the cap path
-    blocks = _blocks(spark, rows)
-    capped = blocks.join(
-        F.broadcast(
-            blocks.groupBy("block_key")
-            .count()
-            .where(F.col("count") > 5)
-            .select("block_key")
-        ),
-        "block_key",
-        "left_anti",
+    df = spark.createDataFrame(rows, ["record_id", "k"])
+    blocks = blocking.block(df, [BlockingStage("k", "exact")], max_block_size=5)
+    got = {(r["record_id"], r["block_key"]) for r in blocks.collect()}
+
+    members: dict[str, set[int]] = {}
+    for rid, k in rows:
+        members.setdefault(f"initial_block-k_exact:{k}", set()).add(rid)
+    want = {(rid, key) for key, ids in members.items() if len(ids) <= 5 for rid in ids}
+    assert got == want
+    assert {key for _, key in got} == {"initial_block-k_exact:edge", "initial_block-k_exact:cold"}
+
+
+def test_candidate_pairs_hash_partitions_probe_side(spark):
+    """The probe side of the block self-join is hash-partitioned by record_id
+    over the default parallelism, so pair generation runs on every core and
+    a pair's rows from all its shared blocks land in one task."""
+    blocks = _blocks(spark, [(i, f"k{i % 3}") for i in range(30)])
+    plan = (
+        pairs.candidate_pairs(blocks, broadcast_blocks=True)
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
     )
-    assert {r["block_key"] for r in capped.select("block_key").distinct().collect()} == {"cold"}
+    n = spark.sparkContext.defaultParallelism
+    assert "BuildRight" in plan
+    assert re.search(
+        rf":- Exchange hashpartitioning\(record_id#\d+L?, {n}\), REPARTITION_BY_NUM", plan
+    ), plan
 
 
 def test_block_stage_api(spark):

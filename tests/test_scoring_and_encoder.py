@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import math
+import uuid
 
 import numpy as np
 from pyspark.sql import functions as F
@@ -62,6 +63,28 @@ def test_tfidf_cosine_identical_docs(spark):
     }
     assert abs(got[(1, 2)] - 1.0) < 1e-9  # identical docs
     assert got[(1, 3)] == 0.0             # disjoint vocabulary
+
+
+def test_tfidf_vectors_builds_without_a_job(spark):
+    """The document count N is part of the plan, not collected while the
+    vectors are built."""
+    docs = spark.createDataFrame(
+        [(1, "alpha beta"), (2, "beta gamma")], ["record_id", "text"]
+    )
+    sc = spark.sparkContext
+    group = f"tfidf-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "tfidf_vectors")
+    try:
+        vecs = S.tfidf_vectors(docs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    # N = 2: "beta" is in both docs, so its idf is ln(3/3) + 1 = 1
+    exact = S.tfidf_vectors(docs, num_features=None)
+    w = {(r["id"], r["term_key"]): r["w"] for r in exact.collect()}
+    idf_rare = math.log(3 / 2) + 1
+    assert abs(w[(1, "beta")] - 1 / math.sqrt(1 + idf_rare**2)) < 1e-12
+    assert vecs.count() == 4
 
 
 def test_score_stage_end_to_end(spark):
