@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import math
 import os
+import re
 import tempfile
 import zipfile
 from collections.abc import Callable
@@ -18,7 +19,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .functions.blocking_keys import phonetic_combination
-from .operators import components, pairs
+from .operators import blocking, components, dedup, pairs
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -115,28 +116,6 @@ _EDGES_SQL = f"""
     )
 """
 
-_TOKENS_SQL = """
-    tokens AS (
-        SELECT DISTINCT doc_id, unnest(string_split_regex(text, '[ \\t\\n\\r\\f]+')) AS tok
-        FROM documents
-    ),
-    toksz AS (SELECT doc_id, count(*) AS n_tok FROM tokens GROUP BY 1)
-"""
-
-
-def _tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        _doc(spark, sf_dir)
-        # explicit class, not \s+: Java \s matches \x0B, DuckDB RE2 \s
-        # doesn't — the token boundary must be engine-independent
-        .select(
-            "doc_id",
-            F.explode(F.split(F.col("text"), r"[ \t\n\r\f]+")).alias("tok"),
-        )
-        .distinct()
-    )
-
-
 # ---------------------------------------------------------------------------
 # Queries (SURVEY §2 ids in comments)
 # ---------------------------------------------------------------------------
@@ -146,9 +125,7 @@ def q_blocking_keys(spark: SparkSession, sf_dir: str) -> DataFrame:  # B2+B5
 
 
 def q_block_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:  # G1
-    return _blocks(spark, sf_dir).groupBy("block_key").agg(
-        F.count("*").alias("block_size")
-    )
+    return blocking.block_sizes(_blocks(spark, sf_dir))
 
 
 def q_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:  # G2
@@ -186,65 +163,28 @@ def q_component_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:  # G7
 
 
 def q_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:  # dedup: exact
-    from .functions.text import md5_fingerprint
-
-    return (
-        _doc(spark, sf_dir)
-        .select("doc_id", md5_fingerprint(F.col("text")).alias("fp"))
-        .groupBy("fp")
-        .agg(F.count("*").alias("dup_count"), F.min("doc_id").alias("keep_doc_id"))
-    )
+    return dedup.exact_dedup(_doc(spark, sf_dir))
 
 
 def q_token_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:  # dedup: jaccard
     # edges (small output, expensive chain) feeds the intersection AND the
-    # final join — checkpoint it; tok is long-form and cheaper to recompute
-    tok = _tokens(spark, sf_dir)
-    sizes = tok.groupBy("doc_id").agg(F.count("*").alias("n_tok"))
+    # final join — checkpoint it; tokens are long-form and cheaper to recompute
     edges = (
         pairs.prune(_edges(spark, sf_dir)).select("id1", "id2")
         .localCheckpoint(eager=False)
     )
-    t1 = tok.select(F.col("doc_id").alias("id1"), "tok")
-    t2 = tok.select(F.col("doc_id").alias("id2"), "tok")
-    inter = (
-        edges.join(t1, "id1").join(t2, ["id2", "tok"]).groupBy("id1", "id2")
-        .agg(F.count("*").alias("isect"))
-    )
-    s1 = sizes.select(F.col("doc_id").alias("id1"), F.col("n_tok").alias("n1"))
-    s2 = sizes.select(F.col("doc_id").alias("id2"), F.col("n_tok").alias("n2"))
-    return (
-        edges.join(inter, ["id1", "id2"], "left")
-        .join(s1, "id1")
-        .join(s2, "id2")
-        .select(
-            "id1",
-            "id2",
-            F.round(
-                F.coalesce(F.col("isect"), F.lit(0))
-                / (F.col("n1") + F.col("n2") - F.coalesce(F.col("isect"), F.lit(0))),
-                6,
-            ).alias("jaccard"),
-        )
+    tok = dedup._tokens(_doc(spark, sf_dir), "doc_id", "text")
+    return dedup.set_jaccard(edges, tok, "jaccard").withColumn(
+        "jaccard", F.round("jaccard", 6)
     )
 
 
 def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:  # dedup: minhash
-    tok = _tokens(spark, sf_dir)
-    hashes = [
-        F.min(
-            F.conv(F.substring(F.md5(F.concat(F.lit(f"{i}_"), F.col("tok"))), 1, 15), 16, 10)
-            .cast("long")
-        ).alias(f"h{i}")
-        for i in range(8)
-    ]
-    return tok.groupBy("doc_id").agg(*hashes)
+    return dedup.minhash_signatures(_doc(spark, sf_dir))
 
 
 def q_minhash_band_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH banding: 4 bands × 2 rows; pairs agreeing on ≥1 band."""
-    from .operators import dedup
-
     sig = q_minhash_signatures(spark, sf_dir)
     return dedup.minhash_band_pairs(sig, id_col="doc_id")
 
@@ -362,16 +302,12 @@ def _wrap(fn: QueryFn) -> QueryFn:
 
 
 def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:  # dedup: char 3-gram
-    from .operators import dedup
-
     docs = _doc(spark, sf_dir)
     edges = pairs.prune(_edges(spark, sf_dir)).select("id1", "id2")
     return dedup.ngram_jaccard_pairs(docs, edges)
 
 
 def q_minhash_jaccard_est(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators import dedup
-
     sig = q_minhash_signatures(spark, sf_dir)
     edges = pairs.prune(_edges(spark, sf_dir)).select("id1", "id2")
     return dedup.minhash_jaccard_estimate(sig, edges)
@@ -381,8 +317,6 @@ def q_simhash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # max_hamming=3 ⇒ 4×16-bit bands: the pigeonhole guarantee holds AND the
     # buckets stay selective (a larger k needs k+1 narrower bands — supported,
     # but candidate volume grows; 3 is the standard near-dup radius).
-    from .operators import dedup
-
     sig = dedup.simhash_signatures(_doc(spark, sf_dir))
     return dedup.simhash_near_pairs(sig, max_hamming=3)
 
@@ -578,9 +512,8 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     demo threshold sits where the keep/drop split is non-trivial at every
     gate scale (sf0.001: 440 kept / 60 dropped)."""
     from .operators.ann import ivf_fixed_centroids
-    from .operators.dedup import semantic_dedup
 
-    return semantic_dedup(
+    return dedup.semantic_dedup(
         _emb(spark, sf_dir),
         centroids=ivf_fixed_centroids(n_lists=16, dim=64),
         threshold=0.35,
@@ -668,9 +601,7 @@ def q_lm_cross_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Maximal cross-doc duplicated 8-gram spans (Lee et al. removable-span
     dedup primitive) over the documents table."""
-    from .operators.dedup import duplicated_spans
-
-    return duplicated_spans(_doc(spark, sf_dir))
+    return dedup.duplicated_spans(_doc(spark, sf_dir))
 
 
 def q_dup_spans_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -679,9 +610,7 @@ def q_dup_spans_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     contiguous duplicated string (single-partner case) instead of merely a
     run of independently-duplicated 8-grams — one join closer to Lee et
     al.'s suffix-array semantics, same hash-only shuffle."""
-    from .operators.dedup import duplicated_spans
-
-    return duplicated_spans(_doc(spark, sf_dir), refine_boundaries=True)
+    return dedup.duplicated_spans(_doc(spark, sf_dir), refine_boundaries=True)
 
 
 def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -739,19 +668,9 @@ def q_boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     and reassemble the rest in order (verified via md5)."""
     from .operators.webtext import strip_boilerplate
 
-    d = _doc(spark, sf_dir)
-    page = F.concat_ws(
-        "\n",
-        F.concat(F.lit("Cookie notice for "), F.col("source")),
-        F.concat(F.lit("Home | About | "), F.col("source")),
-        F.col("text"),
-        F.when(
-            F.pmod(F.col("doc_id"), F.lit(50)) == 0,
-            F.lit("Subscribe to our newsletter"),
-        ),
-        F.concat(F.lit("(c) 2024 "), F.col("source")),
+    pages = _doc(spark, sf_dir).select(
+        "doc_id", "source", _synth_page().alias("page")
     )
-    pages = d.select("doc_id", "source", page.alias("page"))
     return strip_boilerplate(pages, min_docs=5).select(
         "doc_id",
         "n_lines",
@@ -767,18 +686,11 @@ def q_training_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     thresholds — reproducible at any partitioning and engine.  The source
     list is a bounded driver-side distinct (source cardinality is tiny by
     construction; a deployment would pass its curated rate table)."""
-    import re as _re
-
-    from .operators.sampling import collect_strata, hash_stratified_sample
+    from .operators.sampling import hash_stratified_sample
 
     d = _doc(spark, sf_dir).select("doc_id", "source")
-    srcs = collect_strata(d, "source")
-    rate_cycle = [0.9, 0.5, 0.25, 0.0]
-    rates = {
-        s: rate_cycle[int(_re.search(r"(\d+)", s).group(1)) % 4] for s in srcs
-    }
     return hash_stratified_sample(
-        d, rates, strata_col="source", id_col="doc_id", salt="mix-v1"
+        d, _mix_rates(d), strata_col="source", id_col="doc_id", salt="mix-v1"
     )
 
 
@@ -796,10 +708,7 @@ def q_crawl_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _doc(spark, sf_dir).select(
         "doc_id",
         _synth_url().alias("url"),
-        F.expr(
-            "timestampadd(HOUR, cast(pmod(doc_id, 240) * 7 as int),"
-            " timestamp'2024-01-01 00:00:00')"
-        ).alias("warc_ts"),
+        _synth_warc_ts().alias("warc_ts"),
     )
     snaps = d.select(
         canonical_url(F.col("url")).alias("canonical_url"),
@@ -828,10 +737,7 @@ def q_crawl_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     snaps = d.select(
         "doc_id",
         canonical_url(_synth_url()).alias("canonical_url"),
-        F.expr(
-            "timestampadd(HOUR, cast(pmod(doc_id, 240) * 7 as int),"
-            " timestamp'2024-01-01 00:00:00')"
-        ).alias("warc_ts"),
+        _synth_warc_ts().alias("warc_ts"),
     )
     fps = d.select(
         F.col("doc_id").alias("keep_doc_id"), F.md5("text").alias("fp")
@@ -862,36 +768,13 @@ def q_prepared_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .plans.webtext_pipeline import WebtextConfig, prepare_corpus
 
     d = _doc(spark, sf_dir)
-    page = F.concat_ws(
-        "\n",
-        F.concat(F.lit("Cookie notice for "), F.col("source")),
-        F.concat(F.lit("Home | About | "), F.col("source")),
-        F.col("text"),
-        F.when(
-            F.pmod(F.col("doc_id"), F.lit(50)) == 0,
-            F.lit("Subscribe to our newsletter"),
-        ),
-        F.concat(F.lit("(c) 2024 "), F.col("source")),
-    )
     pages = d.select(
         "doc_id",
         "source",
         _synth_url().alias("url"),
-        F.expr(
-            "timestampadd(HOUR, cast(pmod(doc_id, 240) * 7 as int),"
-            " timestamp'2024-01-01 00:00:00')"
-        ).alias("warc_ts"),
-        page.alias("page"),
+        _synth_warc_ts().alias("warc_ts"),
+        _synth_page().alias("page"),
     )
-    import re as _re
-
-    from .operators.sampling import collect_strata
-
-    srcs = collect_strata(d, "source")
-    rate_cycle = [0.9, 0.5, 0.25, 0.0]
-    rates = {
-        s: rate_cycle[int(_re.search(r"(\d+)", s).group(1)) % 4] for s in srcs
-    }
     out = prepare_corpus(
         pages,
         WebtextConfig(
@@ -899,7 +782,7 @@ def q_prepared_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
             min_quality=0.3,
             keep_langs=("en",),
             jaccard_threshold=0.8,
-            mix_rates=rates,
+            mix_rates=_mix_rates(d),
             mix_default_rate=0.0,
         ),
     )
@@ -1023,6 +906,47 @@ def _synth_url() -> Column:
     )
 
 
+def _synth_warc_ts() -> Column:
+    """Deterministic crawl timestamp from doc_id: pmod(doc_id, 240) * 7 hours
+    after 2024-01-01, so ids 480 apart tie (shared by q_crawl_snapshot /
+    q_crawl_diff / q_prepared_corpus and their SQL oracles)."""
+    return F.expr(
+        "timestampadd(HOUR, cast(pmod(doc_id, 240) * 7 as int),"
+        " timestamp'2024-01-01 00:00:00')"
+    )
+
+
+def _synth_page() -> Column:
+    """Deterministic multi-line page around the single-line fixture text:
+    per-source cookie/nav/copyright lines plus a newsletter line on every
+    50th doc (shared by q_boilerplate_strip / q_prepared_corpus and their
+    SQL oracles)."""
+    return F.concat_ws(
+        "\n",
+        F.concat(F.lit("Cookie notice for "), F.col("source")),
+        F.concat(F.lit("Home | About | "), F.col("source")),
+        F.col("text"),
+        F.when(
+            F.pmod(F.col("doc_id"), F.lit(50)) == 0,
+            F.lit("Subscribe to our newsletter"),
+        ),
+        F.concat(F.lit("(c) 2024 "), F.col("source")),
+    )
+
+
+def _mix_rates(docs: DataFrame) -> dict[str, float]:
+    """Per-source keep rate by source index mod 4: 0.9 / 0.5 / 0.25 / 0.0,
+    over the bounded driver-side source list (shared by q_training_mix /
+    q_prepared_corpus and their SQL oracles)."""
+    from .operators.sampling import collect_strata
+
+    rate_cycle = [0.9, 0.5, 0.25, 0.0]
+    return {
+        s: rate_cycle[int(re.search(r"(\d+)", s).group(1)) % 4]
+        for s in collect_strata(docs, "source")
+    }
+
+
 def _emb_pairs_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Labeled scored pairs: cosine(embedding) over vec_id<50 pairs, label =
     same class; cosine rounded to 6dp BEFORE any ranking so Spark and the
@@ -1092,25 +1016,19 @@ def q_score_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:  # E6
 
 
 def q_dedup_keep_list(spark: SparkSession, sf_dir: str) -> DataFrame:  # dedup e2e (oracled)
-    from .operators import dedup
-
     return dedup.dedup_keep_list(_doc(spark, sf_dir), jaccard_threshold=0.8)
 
 
 def q_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing (rolling-hash) document fingerprints: k=5 grams, window 4."""
-    from .operators.dedup import winnow_fingerprints
-
-    return winnow_fingerprints(_doc(spark, sf_dir), k=5, window=4)
+    return dedup.winnow_fingerprints(_doc(spark, sf_dir), k=5, window=4)
 
 
 def q_embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup pairs via SRP-LSH buckets + exact filter."""
-    from .operators.dedup import embedding_near_dup_pairs
-
     # testdata embeddings have no true near-dups (max pairwise cosine ≈0.48),
     # so the demo threshold is 0.3: nonzero LSH-collision pairs to verify
-    return embedding_near_dup_pairs(
+    return dedup.embedding_near_dup_pairs(
         _emb(spark, sf_dir), threshold=0.3, dim=64, output_round_to=4
     )
 
@@ -1829,8 +1747,6 @@ _MINHASH_COLS = ", ".join(
     for i in range(8)
 )
 
-_SIG_SQL = f"WITH {_TOKENS_SQL} SELECT doc_id, {_MINHASH_COLS} FROM tokens GROUP BY doc_id"
-
 # Non-empty distinct tokens (operators.dedup._tokens semantics) as a CTE body.
 _NE_TOKENS_SQL = """
     tok AS (
@@ -1841,6 +1757,8 @@ _NE_TOKENS_SQL = """
     ),
     ne_toksz AS (SELECT doc_id, count(*) AS n_tok FROM tok GROUP BY 1)
 """
+
+_SIG_SQL = f"WITH {_NE_TOKENS_SQL} SELECT doc_id, {_MINHASH_COLS} FROM tok GROUP BY doc_id"
 
 
 def _simhash_sql(max_hamming: int = 8) -> str:
@@ -2627,6 +2545,36 @@ def _encoder_forward_sql() -> str:
     """
 
 
+# TF-IDF cosine of the pruned pairs (tfidf_cosine; score_histogram bins it).
+_TFIDF_COSINE_SQL = f"""
+    WITH {_EDGES_SQL},
+    pruned AS (SELECT id1, id2 FROM edges WHERE weight > 1.5),
+    terms AS (
+        SELECT doc_id AS id, unnest(string_split_regex(lower(text), '[ \\t\\n\\r\\f]+')) AS term
+        FROM documents
+    ),
+    tf AS (SELECT id, term AS term_key, count(*) AS tf
+           FROM terms WHERE term <> '' GROUP BY 1, 2),
+    n AS (SELECT count(DISTINCT doc_id) AS n_docs FROM documents),
+    idf AS (SELECT term_key,
+                   ln((1.0 + (SELECT n_docs FROM n)) / (1.0 + count(DISTINCT id))) + 1.0 AS idf
+            FROM tf GROUP BY 1),
+    wts AS (SELECT tf.id, tf.term_key, tf.tf * idf.idf AS w
+            FROM tf JOIN idf USING (term_key)),
+    nrm AS (SELECT id, sqrt(sum(w * w)) AS nm FROM wts GROUP BY 1),
+    vec AS (SELECT wts.id, term_key, w / nm AS w FROM wts JOIN nrm USING (id)),
+    dots AS (
+        SELECT p.id1, p.id2, sum(v1.w * v2.w) AS dot
+        FROM pruned p
+        JOIN vec v1 ON v1.id = p.id1
+        JOIN vec v2 ON v2.id = p.id2 AND v1.term_key = v2.term_key
+        GROUP BY 1, 2
+    )
+    SELECT p.id1, p.id2, round(coalesce(d.dot, 0.0), 6) AS tfidf_cosine
+    FROM pruned p LEFT JOIN dots d ON d.id1 = p.id1 AND d.id2 = p.id2
+"""
+
+
 def oracle_sql() -> dict[str, str]:
     return {
         "blocking_keys": _BLOCKS_SQL,
@@ -2687,13 +2635,13 @@ def oracle_sql() -> dict[str, str]:
         """,
         "token_jaccard": f"""
             WITH {_EDGES_SQL},
-            {_TOKENS_SQL.lstrip().lstrip(',')}
-            , pruned AS (SELECT id1, id2 FROM edges WHERE weight > 1.5),
+            {_NE_TOKENS_SQL},
+            pruned AS (SELECT id1, id2 FROM edges WHERE weight > 1.5),
             inter AS (
                 SELECT p.id1, p.id2, count(*) AS isect
                 FROM pruned p
-                JOIN tokens t1 ON t1.doc_id = p.id1
-                JOIN tokens t2 ON t2.doc_id = p.id2 AND t1.tok = t2.tok
+                JOIN tok t1 ON t1.doc_id = p.id1
+                JOIN tok t2 ON t2.doc_id = p.id2 AND t1.tok = t2.tok
                 GROUP BY 1, 2
             )
             SELECT p.id1, p.id2,
@@ -2701,8 +2649,8 @@ def oracle_sql() -> dict[str, str]:
                          / (s1.n_tok + s2.n_tok - coalesce(i.isect, 0)), 6) AS jaccard
             FROM pruned p
             LEFT JOIN inter i ON i.id1 = p.id1 AND i.id2 = p.id2
-            JOIN toksz s1 ON s1.doc_id = p.id1
-            JOIN toksz s2 ON s2.doc_id = p.id2
+            JOIN ne_toksz s1 ON s1.doc_id = p.id1
+            JOIN ne_toksz s2 ON s2.doc_id = p.id2
         """,
         "minhash_signatures": _SIG_SQL,
         "minhash_band_candidates": f"""
@@ -2840,33 +2788,7 @@ def oracle_sql() -> dict[str, str]:
             FROM pruned p JOIN sig a ON a.doc_id = p.id1
                           JOIN sig b ON b.doc_id = p.id2
         """,
-        "tfidf_cosine": f"""
-            WITH {_EDGES_SQL},
-            pruned AS (SELECT id1, id2 FROM edges WHERE weight > 1.5),
-            terms AS (
-                SELECT doc_id AS id, unnest(string_split_regex(lower(text), '[ \\t\\n\\r\\f]+')) AS term
-                FROM documents
-            ),
-            tf AS (SELECT id, term AS term_key, count(*) AS tf
-                   FROM terms WHERE term <> '' GROUP BY 1, 2),
-            n AS (SELECT count(DISTINCT doc_id) AS n_docs FROM documents),
-            idf AS (SELECT term_key,
-                           ln((1.0 + (SELECT n_docs FROM n)) / (1.0 + count(DISTINCT id))) + 1.0 AS idf
-                    FROM tf GROUP BY 1),
-            wts AS (SELECT tf.id, tf.term_key, tf.tf * idf.idf AS w
-                    FROM tf JOIN idf USING (term_key)),
-            nrm AS (SELECT id, sqrt(sum(w * w)) AS nm FROM wts GROUP BY 1),
-            vec AS (SELECT wts.id, term_key, w / nm AS w FROM wts JOIN nrm USING (id)),
-            dots AS (
-                SELECT p.id1, p.id2, sum(v1.w * v2.w) AS dot
-                FROM pruned p
-                JOIN vec v1 ON v1.id = p.id1
-                JOIN vec v2 ON v2.id = p.id2 AND v1.term_key = v2.term_key
-                GROUP BY 1, 2
-            )
-            SELECT p.id1, p.id2, round(coalesce(d.dot, 0.0), 6) AS tfidf_cosine
-            FROM pruned p LEFT JOIN dots d ON d.id1 = p.id1 AND d.id2 = p.id2
-        """,
+        "tfidf_cosine": _TFIDF_COSINE_SQL,
         "quality_score": """
             WITH s AS (
                 SELECT doc_id, text, length(text) AS n,
@@ -3362,33 +3284,7 @@ def oracle_sql() -> dict[str, str]:
             FROM s GROUP BY 1, 2
         """,
         "score_histogram": f"""
-            WITH scored AS (
-            WITH {_EDGES_SQL},
-            pruned AS (SELECT id1, id2 FROM edges WHERE weight > 1.5),
-            terms AS (
-                SELECT doc_id AS id, unnest(string_split_regex(lower(text), '[ \\t\\n\\r\\f]+')) AS term
-                FROM documents
-            ),
-            tf AS (SELECT id, term AS term_key, count(*) AS tf
-                   FROM terms WHERE term <> '' GROUP BY 1, 2),
-            n AS (SELECT count(DISTINCT doc_id) AS n_docs FROM documents),
-            idf AS (SELECT term_key,
-                           ln((1.0 + (SELECT n_docs FROM n)) / (1.0 + count(DISTINCT id))) + 1.0 AS idf
-                    FROM tf GROUP BY 1),
-            wts AS (SELECT tf.id, tf.term_key, tf.tf * idf.idf AS w
-                    FROM tf JOIN idf USING (term_key)),
-            nrm AS (SELECT id, sqrt(sum(w * w)) AS nm FROM wts GROUP BY 1),
-            vec AS (SELECT wts.id, term_key, w / nm AS w FROM wts JOIN nrm USING (id)),
-            dots AS (
-                SELECT p.id1, p.id2, sum(v1.w * v2.w) AS dot
-                FROM pruned p
-                JOIN vec v1 ON v1.id = p.id1
-                JOIN vec v2 ON v2.id = p.id2 AND v1.term_key = v2.term_key
-                GROUP BY 1, 2
-            )
-            SELECT p.id1, p.id2, round(coalesce(d.dot, 0.0), 6) AS tfidf_cosine
-            FROM pruned p LEFT JOIN dots d ON d.id1 = p.id1 AND d.id2 = p.id2
-        )
+            WITH scored AS ({_TFIDF_COSINE_SQL})
             SELECT least(floor(tfidf_cosine * 10), 9)::bigint AS bin,
                    count(*) AS n_pairs,
                    round(avg(tfidf_cosine), 6) AS mean_score

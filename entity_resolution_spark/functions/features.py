@@ -11,8 +11,8 @@ and ``clustering/klsh_engine.py:148-198``):
   sklearn StandardScaler semantics)                           (``klsh_engine.py:159-161``)
 * each engineered column multiplied by its weight             (``klsh_engine.py:164-184``)
 
-All JVM-side column expressions; the per-component scaler uses a window
-aggregation over the component id so the "fit" never leaves the executors.
+All JVM-side column expressions; the per-component scaler fit is a groupBy
+over the component id joined back, so the "fit" never leaves the executors.
 """
 
 from __future__ import annotations
@@ -20,7 +20,7 @@ from __future__ import annotations
 import math
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 HALF_PI = math.pi / 2.0
@@ -48,15 +48,6 @@ def embed_date(
     frac = F.least(F.greatest(delta_s / F.lit(horizon_days * 86400.0), F.lit(0.0)), F.lit(1.0))
     theta = frac * F.lit(HALF_PI)
     return F.cos(theta), F.sin(theta)
-
-
-def zscore_per_group(col: Column, group_col: str) -> Column:
-    """Population z-score fitted within each group (StandardScaler semantics,
-    ddof=0).  Zero-variance groups map to 0.0 (sklearn divides by 1 then)."""
-    w = Window.partitionBy(group_col)
-    mean = F.avg(col).over(w)
-    std = F.stddev_pop(col).over(w)
-    return F.when(std > 0, (col - mean) / std).otherwise(F.lit(0.0))
 
 
 def iqr_outlier_report(
@@ -121,20 +112,34 @@ class FeatureSpec:
 
 
 def engineer(df: DataFrame, spec: FeatureSpec, component_col: str = "component_id") -> DataFrame:
-    """Spark-side feature engineering producing the weighted numeric columns.
+    """Spark-side feature engineering producing the weighted numeric columns
+    (``spec.output_columns()``, in ``klsh.engineer_pandas`` order).
 
-    Per-component scaler fit happens via window aggregation — semantically
-    identical to the reference's per-slice ``StandardScaler().fit_transform``.
+    The per-component scaler fit — the reference's per-slice
+    ``StandardScaler().fit_transform`` — is a groupBy (map-side combinable
+    partial aggregates) joined back on the component id, not a window: a
+    window buffers a whole mega component in one task.  The join is
+    null-safe, so rows with a NULL component are scaled as one group.
     """
     out = df
     for c in spec.bool_cols:
         cos, sin = embed_bool(F.col(c))
         out = out.withColumn(f"{c}_cos", cos * spec.weight(f"{c}_cos"))
         out = out.withColumn(f"{c}_sin", sin * spec.weight(f"{c}_sin"))
-    for c in spec.numeric_cols:
-        out = out.withColumn(
-            c, zscore_per_group(F.col(c), component_col) * spec.weight(c)
-        )
+    if spec.numeric_cols:
+        aggs = []
+        for c in spec.numeric_cols:
+            aggs += [
+                F.avg(F.col(c).cast("double")).alias(f"_mu_{c}"),
+                F.stddev_pop(F.col(c).cast("double")).alias(f"_sd_{c}"),
+            ]
+        stats = df.groupBy(F.col(component_col).alias("_grp")).agg(*aggs)
+        out = out.join(stats, out[component_col].eqNullSafe(stats["_grp"]))
+        for c in spec.numeric_cols:
+            mu, sd = F.col(f"_mu_{c}"), F.col(f"_sd_{c}")
+            z = F.when(sd > 0, (F.col(c).cast("double") - mu) / sd).otherwise(F.lit(0.0))
+            out = out.withColumn(c, z * spec.weight(c))
+        out = out.drop(*stats.columns)
     for c, ref, horizon in spec.date_cols:
         cos, sin = embed_date(F.col(c), ref, horizon)
         out = out.withColumn(f"{c}_cos", cos * spec.weight(f"{c}_cos"))

@@ -127,21 +127,29 @@ def _driver_finish(e: DataFrame) -> DataFrame:
     )
 
 
+def hadoop_fs(spark, path: str):
+    """(FileSystem, Path) for ``path`` via the Hadoop FileSystem API, so the
+    same code serves local paths and file://, HDFS or S3A URIs."""
+    hpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), hpath
+
+
+def write_committed(spark, path: str) -> bool:
+    """True iff a Spark write into ``path`` completed (its ``_SUCCESS``
+    marker is present)."""
+    fs, marker = hadoop_fs(spark, f"{path.rstrip('/')}/_SUCCESS")
+    return fs.exists(marker)
+
+
 def _completed_rounds(spark, checkpoint_dir: str) -> list[int]:
-    """Round indices under ``checkpoint_dir`` whose parquet write completed
-    (``_SUCCESS`` marker present) — via the Hadoop FileSystem API, so the
-    same code lists local paths in the sandbox and HDFS/S3A on a cluster."""
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(checkpoint_dir)
-    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    """Round indices under ``checkpoint_dir`` whose parquet write completed."""
+    fs, hpath = hadoop_fs(spark, checkpoint_dir)
     if not fs.exists(hpath):
         return []
     out = []
     for st in fs.listStatus(hpath):
         name = st.getPath().getName()
-        if name.startswith("round_") and fs.exists(
-            jvm.org.apache.hadoop.fs.Path(st.getPath(), "_SUCCESS")
-        ):
+        if name.startswith("round_") and write_committed(spark, st.getPath().toString()):
             out.append(int(name.split("_")[1]))
     return sorted(out)
 

@@ -33,6 +33,9 @@ from ..functions.text import md5_fingerprint, tokens
 # ---------------------------------------------------------------------------
 
 def _tokens(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(id, tok) distinct non-empty whitespace tokens.  An explicit class,
+    not \\s+: Java \\s matches \\x0B, DuckDB RE2 \\s doesn't — the token
+    boundary must be engine-independent."""
     return docs.select(
         F.col(id_col).alias("id"),
         F.explode(F.split(F.col(text_col), r"[ \t\n\r\f]+")).alias("tok"),
@@ -300,8 +303,40 @@ def simhash_near_pairs(
 
 
 # ---------------------------------------------------------------------------
-# n-gram Jaccard
+# set Jaccard (tokens, character n-grams)
 # ---------------------------------------------------------------------------
+
+def set_jaccard(pairs_df: DataFrame, units: DataFrame, out_col: str) -> DataFrame:
+    """(id1, id2, out_col) exact set Jaccard |A∩B| / |A∪B| for each pair,
+    where a record's set is its rows of the distinct ``(id, unit)`` table
+    ``units`` (second column = the unit).  A pair sharing no unit scores 0;
+    a record with no unit drops out of the inner size joins."""
+    unit = units.columns[1]
+    sizes = units.groupBy("id").agg(F.count("*").alias("n_units"))
+    u1 = units.select(F.col("id").alias("id1"), unit)
+    u2 = units.select(F.col("id").alias("id2"), unit)
+    inter = (
+        pairs_df.join(u1, "id1")
+        .join(u2, ["id2", unit])
+        .groupBy("id1", "id2")
+        .agg(F.count("*").alias("isect"))
+    )
+    z1 = sizes.select(F.col("id").alias("id1"), F.col("n_units").alias("n1"))
+    z2 = sizes.select(F.col("id").alias("id2"), F.col("n_units").alias("n2"))
+    return (
+        pairs_df.join(inter, ["id1", "id2"], "left")
+        .join(z1, "id1")
+        .join(z2, "id2")
+        .select(
+            "id1",
+            "id2",
+            (
+                F.coalesce("isect", F.lit(0))
+                / (F.col("n1") + F.col("n2") - F.coalesce("isect", F.lit(0)))
+            ).alias(out_col),
+        )
+    )
+
 
 def ngram_jaccard_pairs(
     docs: DataFrame,
@@ -324,30 +359,7 @@ def ngram_jaccard_pairs(
     block managers' memory+disk tier."""
     pairs_df = pairs_df.localCheckpoint(eager=False)
     sh = char_shingles(docs, id_col, text_col, n).localCheckpoint(eager=False)
-    sizes = sh.groupBy("id").agg(F.count("*").alias("n_sh"))
-    s1 = sh.select(F.col("id").alias("id1"), "shingle")
-    s2 = sh.select(F.col("id").alias("id2"), "shingle")
-    inter = (
-        pairs_df.join(s1, "id1")
-        .join(s2, ["id2", "shingle"])
-        .groupBy("id1", "id2")
-        .agg(F.count("*").alias("isect"))
-    )
-    z1 = sizes.select(F.col("id").alias("id1"), F.col("n_sh").alias("n1"))
-    z2 = sizes.select(F.col("id").alias("id2"), F.col("n_sh").alias("n2"))
-    out = (
-        pairs_df.join(inter, ["id1", "id2"], "left")
-        .join(z1, "id1")
-        .join(z2, "id2")
-        .select(
-            "id1",
-            "id2",
-            (
-                F.coalesce("isect", F.lit(0))
-                / (F.col("n1") + F.col("n2") - F.coalesce("isect", F.lit(0)))
-            ).alias("ngram_jaccard"),
-        )
-    )
+    out = set_jaccard(pairs_df, sh, "ngram_jaccard")
     if round_to is not None:
         out = out.withColumn("ngram_jaccard", F.round("ngram_jaccard", round_to))
     return out

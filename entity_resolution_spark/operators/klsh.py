@@ -18,18 +18,13 @@ explosion and best-k-by-F1 (E4) stay DataFrame ops downstream.
 
 from __future__ import annotations
 
-import math
-from typing import Iterable
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.features import FeatureSpec
+from ..functions.features import HALF_PI, FeatureSpec, engineer
 from ..ml.kmeans import kmeans_fit_predict, silhouette
-
-HALF_PI = math.pi / 2.0
 
 KLSH_SCHEMA = (
     "component_id long, record_id long, k int, cluster_id int, "
@@ -72,58 +67,6 @@ def engineer_pandas(pdf: pd.DataFrame, spec: FeatureSpec) -> np.ndarray:
     return np.column_stack(cols)
 
 
-def _engineer_spark(
-    records: DataFrame,
-    spec: FeatureSpec,
-    component_col: str,
-    id_col: str,
-) -> tuple[DataFrame, list[str]]:
-    """Distributed mirror of :func:`engineer_pandas` for the Lloyd fallback.
-
-    Per-component scaler stats come from a groupBy + equi-join (map-side
-    combinable partial aggregates) rather than a window, so a mega
-    component never lands in one task; quarter-circle embeds are plain
-    Catalyst expressions.  Column order matches ``engineer_pandas``
-    (bools, numerics, dates, ordinals).
-    """
-    from ..functions import features as FE
-
-    out = records
-    fcols: list[str] = []
-    for c in spec.bool_cols:
-        cos, sin = FE.embed_bool(F.col(c))
-        out = out.withColumn(f"_f_{c}_cos", cos * F.lit(spec.weight(f"{c}_cos")))
-        out = out.withColumn(f"_f_{c}_sin", sin * F.lit(spec.weight(f"{c}_sin")))
-        fcols += [f"_f_{c}_cos", f"_f_{c}_sin"]
-    if spec.numeric_cols:
-        aggs = []
-        for c in spec.numeric_cols:
-            aggs += [
-                F.avg(F.col(c).cast("double")).alias(f"_mu_{c}"),
-                F.stddev_pop(F.col(c).cast("double")).alias(f"_sd_{c}"),
-            ]
-        stats = records.groupBy(component_col).agg(*aggs)
-        out = out.join(stats, component_col)
-        for c in spec.numeric_cols:
-            z = F.when(
-                F.col(f"_sd_{c}") > 0,
-                (F.col(c).cast("double") - F.col(f"_mu_{c}")) / F.col(f"_sd_{c}"),
-            ).otherwise(F.lit(0.0))
-            out = out.withColumn(f"_f_{c}", z * F.lit(spec.weight(c)))
-            fcols.append(f"_f_{c}")
-    for c, ref, horizon in spec.date_cols:
-        cos, sin = FE.embed_date(F.col(c), ref, horizon)
-        out = out.withColumn(f"_f_{c}_cos", cos * F.lit(spec.weight(f"{c}_cos")))
-        out = out.withColumn(f"_f_{c}_sin", sin * F.lit(spec.weight(f"{c}_sin")))
-        fcols += [f"_f_{c}_cos", f"_f_{c}_sin"]
-    for c, mx in spec.ordinal_cols:
-        cos, sin = FE.embed_ordinal(F.col(c), mx)
-        out = out.withColumn(f"_f_{c}_cos", cos * F.lit(spec.weight(f"{c}_cos")))
-        out = out.withColumn(f"_f_{c}_sin", sin * F.lit(spec.weight(f"{c}_sin")))
-        fcols += [f"_f_{c}_cos", f"_f_{c}_sin"]
-    return out.select(component_col, id_col, *fcols), fcols
-
-
 def _lloyd_fallback(
     big: DataFrame,
     spec: FeatureSpec,
@@ -136,7 +79,8 @@ def _lloyd_fallback(
     the sweep's long-form schema (one k row, wcss of the final assignment,
     NaN silhouette — exact silhouette is O(n²) and meaningless to attempt
     on a component that already blew the sweep's size gate)."""
-    feats, fcols = _engineer_spark(big, spec, component_col, id_col)
+    fcols = spec.output_columns()
+    feats = engineer(big, spec, component_col).select(component_col, id_col, *fcols)
     asg = klsh_lloyd(
         feats, fcols, k=k, iters=iters,
         component_col=component_col, id_col=id_col,

@@ -1,15 +1,18 @@
 """Resumable stage checkpoints + per-partition lineage and metrics tables.
 
 North-rule requirement: "resumable mid-run from snapshot checkpoints with
-per-partition lineage and metrics tables".  Iceberg is not in this container;
+per-partition lineage and metrics tables".  Iceberg is not a dependency;
 the mechanism is identical with parquet stage tables (on a real cluster,
 swap ``parquet`` for ``iceberg`` and each stage write becomes a snapshot —
-the checkpointer only touches ``spark.read``/``df.write``).
+stage data only goes through ``spark.read``/``df.write``, and markers and
+metrics files through the Hadoop FileSystem API, so ``base_dir`` may be a
+local path or a file://, hdfs:// or s3a:// URI).
 
 Layout under ``base_dir``::
 
     <base>/<run_id>/stages/<stage_name>/          parquet stage output
     <base>/<run_id>/stages/<stage_name>/_METRICS/ per-partition lineage rows
+    <base>/<run_id>/stages/<stage_name>/_STAGE_METRICS.json  rows, seconds
 
 A stage is *done* iff its ``_SUCCESS`` marker exists; ``stage()`` then reads
 the snapshot instead of recomputing — restartable from any point mid-run.
@@ -21,26 +24,28 @@ aggregates.
 from __future__ import annotations
 
 import json
-import os
 import time
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.components import hadoop_fs, write_committed
+
 
 class StageCheckpointer:
     def __init__(self, spark: SparkSession, base_dir: str, run_id: str) -> None:
         self.spark = spark
-        self.base = os.path.join(base_dir, run_id)
+        self.base = f"{base_dir.rstrip('/')}/{run_id}"
         self.run_id = run_id
-        os.makedirs(os.path.join(self.base, "stages"), exist_ok=True)
+        fs, stages = hadoop_fs(spark, f"{self.base}/stages")
+        fs.mkdirs(stages)
 
     def _stage_path(self, name: str) -> str:
-        return os.path.join(self.base, "stages", name)
+        return f"{self.base}/stages/{name}"
 
     def is_done(self, name: str) -> bool:
-        return os.path.exists(os.path.join(self._stage_path(name), "_SUCCESS"))
+        return write_committed(self.spark, self._stage_path(name))
 
     def stage(self, name: str, build: Callable[[], DataFrame]) -> DataFrame:
         """Return the stage output, computing+persisting it only if missing.
@@ -62,38 +67,42 @@ class StageCheckpointer:
             .withColumn("stage", F.lit(name))
             .withColumn("run_id", F.lit(self.run_id))
         )
-        lineage.write.mode("overwrite").parquet(os.path.join(path, "_METRICS"))
-        with open(os.path.join(path, "_STAGE_METRICS.json"), "w") as f:
-            json.dump(
-                {
-                    "run_id": self.run_id,
-                    "stage": name,
-                    "rows": out.count(),
-                    "seconds": round(seconds, 3),
-                },
-                f,
-            )
+        lineage.write.mode("overwrite").parquet(f"{path}/_METRICS")
+        record = {
+            "run_id": self.run_id,
+            "stage": name,
+            "rows": out.count(),
+            "seconds": round(seconds, 3),
+        }
+        fs, hpath = hadoop_fs(self.spark, f"{path}/_STAGE_METRICS.json")
+        stream = fs.create(hpath, True)
+        try:
+            stream.write(bytearray(json.dumps(record).encode()))
+        finally:
+            stream.close()
         return out
 
     def metrics(self) -> list[dict]:
         """All recorded stage metrics for this run."""
+        fs, stages = hadoop_fs(self.spark, f"{self.base}/stages")
         out = []
-        stages_dir = os.path.join(self.base, "stages")
-        for name in sorted(os.listdir(stages_dir)):
-            p = os.path.join(stages_dir, name, "_STAGE_METRICS.json")
-            if os.path.exists(p):
-                with open(p) as f:
-                    out.append(json.load(f))
+        for st in sorted(fs.listStatus(stages), key=lambda st: st.getPath().getName()):
+            _, p = hadoop_fs(self.spark, f"{st.getPath().toString()}/_STAGE_METRICS.json")
+            if fs.exists(p):
+                stream = fs.open(p)
+                try:
+                    out.append(json.loads(bytes(stream.readAllBytes())))
+                finally:
+                    stream.close()
         return out
 
     def lineage(self, name: str) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self._stage_path(name), "_METRICS"))
+        return self.spark.read.parquet(f"{self._stage_path(name)}/_METRICS")
 
     def invalidate(self, name: str) -> None:
         """Drop a stage (and force downstream recompute on next access)."""
-        import shutil
-
-        shutil.rmtree(self._stage_path(name), ignore_errors=True)
+        fs, hpath = hadoop_fs(self.spark, self._stage_path(name))
+        fs.delete(hpath, True)
 
 
 def resolve_checkpointed(

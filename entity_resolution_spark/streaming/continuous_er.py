@@ -35,9 +35,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import text as T
-from ..functions.blocking_keys import phonetic_combination
+from ..operators import blocking as B
 from ..operators import components as C
 from ..operators import pairs as P
+from ..plans.pipeline import ERConfig
 
 
 class ContinuousER:
@@ -59,15 +60,13 @@ class ContinuousER:
         return os.path.join(self.state_dir, name)
 
     def _batch_blocks(self, batch: DataFrame) -> DataFrame:
-        return (
-            batch.withColumn("record_id", F.xxhash64("url"))
-            .withColumn("title", T.title_of(F.col("text")))
-            .select(
-                "record_id",
-                F.explode(phonetic_combination(F.col("title"))).alias("block_key"),
-            )
-            .distinct()
+        """The batch pipeline's blocking rule (``ERConfig().stages``), with no
+        block purging."""
+        recs = batch.select(
+            F.xxhash64("url").alias("record_id"),
+            T.title_of(F.col("text")).alias("title"),
         )
+        return B.block(recs, ERConfig().stages)
 
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
         new_blocks = self._batch_blocks(batch).localCheckpoint()
@@ -86,16 +85,16 @@ class ContinuousER:
             .distinct()
         )
         touched = blocks.join(F.broadcast(affected_keys), "block_key")
-        raw_pairs = P.candidate_pairs(touched, distinct=False)
+        # The touch filter is per pair, so filtering after the weight count
+        # keeps the same edges as filtering before it.
         n1 = new_ids.withColumnRenamed("record_id", "id1").withColumn("_n1", F.lit(1))
         n2 = new_ids.withColumnRenamed("record_id", "id2").withColumn("_n2", F.lit(1))
         delta = (
-            raw_pairs.join(n1, "id1", "left")
+            P.prune(P.edge_weights(touched), self.prune_threshold)
+            .join(n1, "id1", "left")
             .join(n2, "id2", "left")
             .where(F.col("_n1").isNotNull() | F.col("_n2").isNotNull())
-            .groupBy("id1", "id2")
-            .agg(F.count("*").alias("weight"))
-            .where(F.col("weight") > self.prune_threshold)
+            .select("id1", "id2", "weight")
         )
         delta.write.mode("append").parquet(self._path("edges"))
 

@@ -157,6 +157,34 @@ def test_spark_engineer_matches_pandas_path(spark):
             assert np.allclose(got[rid], row, atol=1e-9), rid
 
 
+def test_spark_engineer_groupby_scaler_keeps_null_component(spark):
+    """The per-component scaler is a groupBy + join (no Window in the plan,
+    so a mega component never lands in one task), and rows whose component
+    is NULL stay and are scaled as one group, as engineer_pandas does."""
+    import numpy as np
+
+    from entity_resolution_spark.functions import features as FE
+    from entity_resolution_spark.operators.klsh import engineer_pandas
+
+    pdf, _groups = make_apollo()
+    pdf = pdf.reset_index().rename(columns={"index": "record_id"})
+    pdf["component_id"] = [None if r % 3 == 2 else r % 3 for r in pdf["record_id"]]
+    sdf = spark.createDataFrame(pdf).withColumn(
+        "longevity", F.to_date("longevity", "dd/MM/yyyy")
+    )
+    out = FE.engineer(sdf, APOLLO_SPEC)
+    assert "Window" not in out._jdf.queryExecution().executedPlan().toString()
+    got = {r["record_id"]: [r[c] for c in APOLLO_SPEC.output_columns()] for r in out.collect()}
+    assert len(got) == len(pdf)
+
+    pdf2 = pdf.copy()
+    pdf2["longevity"] = pd.to_datetime(pdf2["longevity"], format="%d/%m/%Y")
+    for _comp, grp in pdf2.groupby("component_id", dropna=False):
+        X = engineer_pandas(grp, APOLLO_SPEC)
+        for rid, row in zip(grp["record_id"], X):
+            assert np.allclose(got[rid], row, atol=1e-9), rid
+
+
 def test_uncovered_text_functions(spark):
     from entity_resolution_spark.functions import text as T
 

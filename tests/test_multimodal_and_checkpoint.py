@@ -171,6 +171,33 @@ def test_checkpoint_resume(spark, tmp_path):
     assert sorted(map(tuple, out1)) == sorted(map(tuple, out3))
 
 
+def test_checkpoint_resume_on_uri_base_dir(spark, tmp_path, monkeypatch):
+    """A file:// URI base directory (the hdfs:// / s3a:// code path): the
+    second run reads every stage back and rebuilds none, and nothing is
+    written under the driver's working directory."""
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+    pages = spark.createDataFrame(make_pages(n_entities=10).pages)
+    ckpt = StageCheckpointer(spark, (tmp_path / "ck").as_uri(), "run1")
+    out1 = sorted(map(tuple, resolve_checkpointed(pages, ckpt).collect()))
+    metrics = ckpt.metrics()
+    assert [m["stage"] for m in metrics] == [
+        "00_extract", "01_block", "02_edges", "03_pruned", "04_components",
+    ]
+
+    # an EMPTY input only reproduces out1 if no stage is rebuilt, and a
+    # rebuilt stage would rewrite its metrics with rows=0
+    empty = spark.createDataFrame([], pages.schema)
+    out2 = sorted(map(tuple, resolve_checkpointed(empty, ckpt).collect()))
+    assert out2 == out1
+    assert ckpt.metrics() == metrics
+    assert list(cwd.iterdir()) == []
+
+    ckpt.invalidate("03_pruned")
+    assert not ckpt.is_done("03_pruned") and ckpt.is_done("04_components")
+
+
 def test_bmp_8bit_partial_palette():
     """Spec-valid 8-bit BMP with biClrUsed=16 (64-byte palette)."""
     import struct

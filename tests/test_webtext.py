@@ -447,21 +447,19 @@ def test_top_tokens_boundary_class_is_engine_independent(spark):
     assert spark_toks == duck_toks == ["a\x0bb", "c", "d"]
 
 
-def test_tokenizer_call_sites_use_engine_independent_boundary(spark, tmp_path):
-    """Regression for the two Spark-side \\s+ stragglers (entrypoints._tokens
-    and tfidf_vectors' term split): a \\x0B-joined pair must stay ONE unit,
-    matching the DuckDB oracles' [ \\t\\n\\r\\f]+ class."""
-    import entity_resolution_spark.entrypoints as ep
+def test_tokenizer_call_sites_use_engine_independent_boundary(spark):
+    """Regression for the two Spark-side \\s+ stragglers (the driver
+    queries' token split, now dedup._tokens, and tfidf_vectors' term split):
+    a \\x0B-joined pair must stay ONE unit, matching the DuckDB oracles'
+    [ \\t\\n\\r\\f]+ class."""
     from entity_resolution_spark.functions.similarity import tfidf_vectors
+    from entity_resolution_spark.operators import dedup
 
     docs = spark.createDataFrame(
         [(1, "a\x0bb c"), (2, "a\x0bb d")], "doc_id bigint, text string"
     )
-    docs.write.parquet(str(tmp_path / "documents.parquet"))
 
-    toks = {
-        r["tok"] for r in ep._tokens(spark, str(tmp_path)).collect()
-    }
+    toks = {r["tok"] for r in dedup._tokens(docs, "doc_id", "text").collect()}
     assert "a\x0bb" in toks and "a" not in toks and "b" not in toks
 
     vecs = tfidf_vectors(docs, id_col="doc_id", text_col="text", num_features=None)
