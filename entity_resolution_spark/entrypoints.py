@@ -8,7 +8,6 @@ computed column is aliased identically on both sides.
 
 from __future__ import annotations
 
-import math
 import os
 import re
 import tempfile
@@ -19,6 +18,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .functions.blocking_keys import phonetic_combination
+from .functions.features import HALF_PI
 from .operators import blocking, components, dedup, pairs
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -363,11 +363,6 @@ def q_feature_embed(spark: SparkSession, sf_dir: str) -> DataFrame:  # F3/F4 qua
         bc.alias("bool_cos"),
         bs.alias("bool_sin"),
     )
-
-
-# Shared Spark↔SQL constant: both engines multiply by the identical double
-# (avoids the ((x/9)*pi())/2 vs (x/9)*(pi/2) op-order drift).
-HALF_PI = math.pi / 2.0
 
 
 def q_klsh_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:  # G8 (oracled)

@@ -20,32 +20,35 @@ shuffle, and the exact-rerank join touches candidate rows alone.
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def _dot(a, b):
-    # float64 multiply (see functions.similarity.dot: float32 products
-    # straddle the 4dp output grid vs the float64 oracle)
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0).cast("double"),
-        lambda acc, v: acc + v,
-    )
+from ..functions.similarity import cosine
 
 
-def _norm(a):
-    return F.sqrt(
-        F.aggregate(
-            a,
-            F.lit(0.0).cast("double"),
-            lambda acc, v: acc + v.cast("double") * v.cast("double"),
+def _exact_topk(cands: DataFrame, k: int, round_to: int | None) -> DataFrame:
+    """Exact-cosine top-k of (query_id, neighbor_id, qv, cv) candidate rows:
+    (query_id, neighbor_id, cosine).
+
+    Rounds BEFORE ranking: last-ulp float differences between engines must
+    not decide the k-th rank (same discipline as
+    entrypoints._emb_pairs_scored); ties break on neighbor_id.  Output
+    rounds the RAW value, never the 6dp-rounded one: double-rounding (raw →
+    6dp → 4dp) parks ~1% of values exactly on 4dp midpoints, where engines
+    disagree on the half-way direction (hit at sf0.1).
+    """
+    sims = cands.select(
+        "query_id", "neighbor_id", cosine(F.col("qv"), F.col("cv")).alias("_raw")
+    ).withColumn("sim", F.round("_raw", 6))
+    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
+    out = sims.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= k)
+    if round_to is not None:
+        return out.select(
+            "query_id", "neighbor_id", F.round("_raw", round_to).alias("cosine")
         )
-    )
+    return out.select("query_id", "neighbor_id", F.col("sim").alias("cosine"))
 
 
 def cosine_topk(
@@ -68,33 +71,9 @@ def cosine_topk(
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
     )
-    sims = (
-        c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (
-                _dot(F.col("qv"), F.col("cv"))
-                / (_norm(F.col("qv")) * _norm(F.col("cv")))
-            ).alias("_raw"),
-        )
-        # round BEFORE ranking: last-ulp float differences between engines
-        # must not decide the k-th rank (same discipline as
-        # entrypoints._emb_pairs_scored); ties break on neighbor_id
-        .withColumn("sim", F.round("_raw", 6))
+    return _exact_topk(
+        c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id")), k, round_to
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    out = sims.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= k)
-    # Output rounds the RAW value, never the 6dp-rounded one: double-rounding
-    # (raw → 6dp → 4dp) parks ~1% of values exactly on 4dp midpoints, where
-    # engines disagree on the half-way direction (hit at sf0.1).
-    if round_to is not None:
-        out = out.select(
-            "query_id", "neighbor_id", F.round("_raw", round_to).alias("cosine")
-        )
-    else:
-        out = out.select("query_id", "neighbor_id", F.col("sim").alias("cosine"))
-    return out
 
 
 def srp_plane_weight(seed: int, table: int, plane: int, i: int) -> float:
@@ -261,25 +240,7 @@ def ivf_topk(
         .where(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id", "qv", "cv")
     )
-    sims = cands.select(
-        "query_id",
-        "neighbor_id",
-        (
-            _dot(F.col("qv"), F.col("cv"))
-            / (_norm(F.col("qv")) * _norm(F.col("cv")))
-        ).alias("_raw"),
-        # round-before-rank (see cosine_topk)
-    ).withColumn("sim", F.round("_raw", 6))
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    out = sims.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= k)
-    # output rounds the raw value (double-rounding hazard — see cosine_topk)
-    if round_to is not None:
-        out = out.select(
-            "query_id", "neighbor_id", F.round("_raw", round_to).alias("cosine")
-        )
-    else:
-        out = out.select("query_id", "neighbor_id", F.col("sim").alias("cosine"))
-    return out
+    return _exact_topk(cands, k, round_to)
 
 
 def lsh_topk(
@@ -326,25 +287,7 @@ def lsh_topk(
         .select("query_id", "neighbor_id", "qv", "cv")
         .distinct()
     )
-    sims = cands.select(
-        "query_id",
-        "neighbor_id",
-        (
-            _dot(F.col("qv"), F.col("cv"))
-            / (_norm(F.col("qv")) * _norm(F.col("cv")))
-        ).alias("_raw"),
-        # round-before-rank (see cosine_topk)
-    ).withColumn("sim", F.round("_raw", 6))
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    out = sims.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= k)
-    # output rounds the raw value (double-rounding hazard — see cosine_topk)
-    if round_to is not None:
-        out = out.select(
-            "query_id", "neighbor_id", F.round("_raw", round_to).alias("cosine")
-        )
-    else:
-        out = out.select("query_id", "neighbor_id", F.col("sim").alias("cosine"))
-    return out
+    return _exact_topk(cands, k, round_to)
 
 
 # ---------------------------------------------------------------------------
@@ -556,23 +499,6 @@ def pq_topk(
     )
     qdf = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
     cdf = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"))
-    sims = (
-        cand_ids.join(F.broadcast(qdf), "query_id")
-        .join(cdf, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            (
-                _dot(F.col("qv"), F.col("cv"))
-                / (_norm(F.col("qv")) * _norm(F.col("cv")))
-            ).alias("_raw"),
-        )
-        .withColumn("sim", F.round("_raw", 6))
+    return _exact_topk(
+        cand_ids.join(F.broadcast(qdf), "query_id").join(cdf, "neighbor_id"), k, round_to
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    out = sims.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= k)
-    if round_to is not None:
-        return out.select(
-            "query_id", "neighbor_id", F.round("_raw", round_to).alias("cosine")
-        )
-    return out.select("query_id", "neighbor_id", F.col("sim").alias("cosine"))

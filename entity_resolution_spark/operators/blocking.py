@@ -60,6 +60,30 @@ class BlockingStage:
         return col if self.rule_name in ("phonetic_combination", "two_of_three_date") else F.array(col)
 
 
+def block_key_rows(
+    df: DataFrame,
+    stages: list[BlockingStage],
+    keep: list[str | Column],
+    initial_block: str = "initial_block",
+) -> DataFrame:
+    """The ``keep`` columns plus one ``block_key`` row per (record, stage
+    key, hierarchy level) — the blocking rule itself, without dedup or
+    purging, so streaming callers can apply it to an unbounded stream."""
+    out = df
+    key_cols: list[Column] = []
+    for i, stage in enumerate(stages):
+        kc = f"__bk{i}"
+        out = out.withColumn(kc, F.explode(stage.key_column()))
+        key_cols.append(
+            F.concat(F.lit(f"-{stage.feature}_{stage.rule_name}:"), F.col(kc))
+        )
+    level_keys = [
+        F.concat(F.lit(initial_block), *key_cols[: depth + 1])
+        for depth in range(len(key_cols))
+    ]
+    return out.select(*keep, F.explode(F.array(*level_keys)).alias("block_key"))
+
+
 def block(
     df: DataFrame,
     stages: list[BlockingStage],
@@ -80,21 +104,8 @@ def block(
     has weight 2.  Emitting the cumulative prefix key per stage reproduces
     that: level L's block key is the concat of stages 1..L.
     """
-    out = df
-    key_cols: list[Column] = []
-    for i, stage in enumerate(stages):
-        kc = f"__bk{i}"
-        out = out.withColumn(kc, F.explode(stage.key_column()))
-        key_cols.append(
-            F.concat(F.lit(f"-{stage.feature}_{stage.rule_name}:"), F.col(kc))
-        )
-    level_keys = [
-        F.concat(F.lit(initial_block), *key_cols[: depth + 1])
-        for depth in range(len(key_cols))
-    ]
-    blocks = out.select(
-        F.col(id_col).alias("record_id"),
-        F.explode(F.array(*level_keys)).alias("block_key"),
+    blocks = block_key_rows(
+        df, stages, [F.col(id_col).alias("record_id")], initial_block
     ).distinct()  # frozenset semantics: one membership per (record, key)
 
     if max_block_size is not None:

@@ -31,6 +31,8 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..storage import SUCCESS, latest
+
 
 def _bidirectional(edges: DataFrame) -> DataFrame:
     return edges.select("src", "dst").union(
@@ -127,33 +129,6 @@ def _driver_finish(e: DataFrame) -> DataFrame:
     )
 
 
-def hadoop_fs(spark, path: str):
-    """(FileSystem, Path) for ``path`` via the Hadoop FileSystem API, so the
-    same code serves local paths and file://, HDFS or S3A URIs."""
-    hpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
-    return hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), hpath
-
-
-def write_committed(spark, path: str) -> bool:
-    """True iff a Spark write into ``path`` completed (its ``_SUCCESS``
-    marker is present)."""
-    fs, marker = hadoop_fs(spark, f"{path.rstrip('/')}/_SUCCESS")
-    return fs.exists(marker)
-
-
-def _completed_rounds(spark, checkpoint_dir: str) -> list[int]:
-    """Round indices under ``checkpoint_dir`` whose parquet write completed."""
-    fs, hpath = hadoop_fs(spark, checkpoint_dir)
-    if not fs.exists(hpath):
-        return []
-    out = []
-    for st in fs.listStatus(hpath):
-        name = st.getPath().getName()
-        if name.startswith("round_") and write_committed(spark, st.getPath().toString()):
-            out.append(int(name.split("_")[1]))
-    return sorted(out)
-
-
 def _persist_round(e: DataFrame, checkpoint_dir: str, i: int) -> DataFrame:
     """Write round ``i``'s edge set durably and return the re-read — cuts
     lineage like ``localCheckpoint`` but survives executor (and driver)
@@ -190,10 +165,10 @@ def connected_components(
     ).where(F.col("src") != F.col("dst")).distinct()
     start_round = 1
     if checkpoint_dir:
-        done = _completed_rounds(spark, checkpoint_dir)
-        if done:
-            start_round = done[-1] + 1
-            e = spark.read.parquet(f"{checkpoint_dir}/round_{done[-1]:04d}")
+        done = latest(spark, checkpoint_dir, "round_", SUCCESS)
+        if done is not None:
+            start_round = done + 1
+            e = spark.read.parquet(f"{checkpoint_dir}/round_{done:04d}")
         else:
             e = _persist_round(e, checkpoint_dir, 0)
     else:

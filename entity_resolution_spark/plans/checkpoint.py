@@ -30,7 +30,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.components import hadoop_fs, write_committed
+from ..storage import delete, hadoop_fs, write_committed
 
 
 class StageCheckpointer:
@@ -101,8 +101,7 @@ class StageCheckpointer:
 
     def invalidate(self, name: str) -> None:
         """Drop a stage (and force downstream recompute on next access)."""
-        fs, hpath = hadoop_fs(self.spark, self._stage_path(name))
-        fs.delete(hpath, True)
+        delete(self.spark, self._stage_path(name))
 
 
 def resolve_checkpointed(

@@ -4,19 +4,19 @@ The reference renders matplotlib figures for the blocking graph
 (``block_klsh/blocking/graph_visualization.py:6-66``) and training/metric
 curves (``perf_metrics/plots.py:28-583``).  matplotlib is not in this
 container, so these sinks rasterize onto a numpy canvas and emit the PNG with
-``zlib``/``struct`` only.  The Spark contract is the important part: every
-plot collects a *bounded* summary (component sample caps, pre-aggregated
-histogram bins, per-epoch scalars) — never raw data — so the sink is safe at
-any input scale.
+``operators.multimodal.encode_png`` (stdlib ``zlib``/``struct`` only).  The
+Spark contract is the important part: every plot collects a *bounded*
+summary (component sample caps, pre-aggregated histogram bins, per-epoch
+scalars) — never raw data — so the sink is safe at any input scale.
 """
 
 from __future__ import annotations
 
 import math
-import struct
-import zlib
 
 import numpy as np
+
+from ..operators.multimodal import encode_png
 
 # categorical palette (RGB)
 _COLORS = [
@@ -27,25 +27,8 @@ _COLORS = [
 
 
 def write_png(canvas: np.ndarray, path: str) -> None:
-    """Encode an (H, W, 3) uint8 array as an RGB PNG (filter 0, one IDAT)."""
-    h, w, _ = canvas.shape
-    raw = b"".join(b"\x00" + canvas[y].tobytes() for y in range(h))
-
-    def chunk(tag: bytes, body: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(body)) + tag + body
-            + struct.pack(">I", zlib.crc32(tag + body) & 0xFFFFFFFF)
-        )
-
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
-    png = (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(raw, 9))
-        + chunk(b"IEND", b"")
-    )
     with open(path, "wb") as f:
-        f.write(png)
+        f.write(encode_png(canvas))
 
 
 def _canvas(w: int, h: int) -> np.ndarray:

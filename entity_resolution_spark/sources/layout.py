@@ -33,29 +33,27 @@ asserts scan shapes).
 
 **Snapshots / atomic publish** (:func:`publish_pages_layout`): a bare
 ``mode=overwrite`` rewrite has a window where a concurrent reader sees a
-partial table, and a crash mid-rewrite loses the old data too.  The
-publish path therefore reuses the streaming compactor's crash-atomic
-pattern (``streaming/crawl_compaction.py``): each publish writes a FRESH
-versioned directory ``<root>/v{n}/<hive layout>`` and then atomically
-renames a one-line ``CURRENT`` pointer over the old one.  At every
-instant ``CURRENT`` names a complete, readable snapshot; readers that
-resolved an older snapshot keep scanning its (still present) files; a
-crash before the pointer flip leaves an orphan directory the next
-publish simply skips past.  Old snapshots remain readable by version
+partial table, and a crash mid-rewrite loses the old data too.  Each
+publish therefore writes a FRESH versioned directory ``<root>/v{n}/<hive
+layout>`` and only then writes a ``_COMMITTED`` marker into it — the commit
+protocol of ``storage.py``: a version counts iff its marker exists, and the
+current snapshot is the highest committed ``n``.  Readers that resolved an
+older snapshot keep scanning its (still present) files; a crash before the
+marker leaves an orphan directory no reader sees and whose number the next
+publish skips.  Old snapshots remain readable by version
 (:func:`read_pages_snapshot` — time travel) until explicitly retired via
-``retain_last``.  This is exactly the snapshot/commit half of what
-Iceberg metadata buys; the pointer file is the sandbox stand-in for its
-catalog swap.
+``retain_last``.  This is the snapshot/commit half of what Iceberg metadata
+buys; the marker is the sandbox stand-in for its catalog swap.  Listing,
+markers and deletes go through the Hadoop FileSystem API, so ``root`` may be
+a local path or a file://, hdfs:// or s3a:// URI.
 """
 
 from __future__ import annotations
 
-import os
-import re
-import shutil
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .. import storage
 
 #: 2¹⁶ in SCALING.md; tests use small values — one knob, same code path.
 DEFAULT_BUCKETS = 1 << 16
@@ -98,53 +96,25 @@ def write_pages_layout(
     )
 
 
-_SNAPSHOT_RE = re.compile(r"^v(\d+)$")
+def _snapshot_path(root: str, version: int) -> str:
+    return f"{root.rstrip('/')}/v{version}"
 
 
 def snapshot_versions(root: str) -> list[int]:
     """Sorted snapshot versions present under ``root`` (orphans included —
     presence of a directory does not imply it was ever published)."""
-    try:
-        names = os.listdir(root)
-    except FileNotFoundError:
-        return []
-    return sorted(
-        int(m.group(1)) for n in names if (m := _SNAPSHOT_RE.match(n))
-    )
+    return storage.versions(SparkSession.active(), root, "v")
 
 
 def published_versions(root: str) -> list[int]:
-    """Sorted versions that completed a publish: the append-only
-    ``PUBLISHED`` log, unioned with whatever ``CURRENT`` names (a crash
-    between the pointer flip and the log append loses the log line, so
-    the pointer is authoritative for the newest version)."""
-    out: set[int] = set()
-    try:
-        with open(os.path.join(root, "PUBLISHED")) as fh:
-            for line in fh:
-                m = _SNAPSHOT_RE.match(line.strip())
-                if m:
-                    out.add(int(m.group(1)))
-    except (FileNotFoundError, NotADirectoryError):
-        pass
-    cur = current_snapshot(root)
-    if cur is not None:
-        out.add(cur)
-    # a log entry whose directory was already expired is stale history
-    present = set(snapshot_versions(root))
-    return sorted(v for v in out if v in present)
+    """Sorted versions that completed a publish (hold the commit marker)."""
+    return storage.versions(SparkSession.active(), root, "v", storage.COMMITTED)
 
 
 def current_snapshot(root: str) -> int | None:
-    """Version the ``CURRENT`` pointer names, or None for a plain
-    (non-snapshot) layout directory."""
-    try:
-        with open(os.path.join(root, "CURRENT")) as fh:
-            content = fh.read().strip()
-    except (FileNotFoundError, NotADirectoryError):
-        return None
-    m = _SNAPSHOT_RE.match(content)
-    return int(m.group(1)) if m else None
+    """Highest published version, or None for a plain (non-snapshot)
+    layout directory."""
+    return storage.latest(SparkSession.active(), root, "v")
 
 
 def publish_pages_layout(
@@ -159,47 +129,39 @@ def publish_pages_layout(
     ``root``; returns the new version number.
 
     Write order is the crash-safety argument: (1) the full Hive layout
-    lands in a fresh ``v{n}`` directory nobody reads yet; (2) the pointer
-    is REPLACED atomically (write-temp + rename).  A crash during (1)
-    leaves the previous snapshot live and an orphan directory whose
-    version number the next publish skips (it allocates max+1 over ALL
-    ``v*`` directories, published or not — a half-written directory is
-    never reused).  Readers holding the previous snapshot keep working
-    through and after the flip, because a publish never touches existing
-    snapshot directories.
+    lands in a fresh ``v{n}`` directory nobody reads yet; (2) its commit
+    marker makes it the current snapshot.  A crash during (1) leaves the
+    previous snapshot current and an orphan directory whose version number
+    the next publish skips (it allocates max+1 over ALL ``v*`` directories,
+    published or not — a half-written directory is never reused).  Readers
+    holding the previous snapshot keep working through and after the
+    commit, because a publish never touches existing snapshot directories.
 
-    ``retain_last``: optionally delete all but the newest N snapshots
-    AFTER the flip (the new current is always kept).  Deletion breaks
-    readers still scanning those old snapshots — same contract as
+    ``retain_last``: optionally delete all but the newest N published
+    snapshots AFTER the commit (the new current is always kept).  Deletion
+    breaks readers still scanning those old snapshots — same contract as
     expiring Iceberg snapshots — so it runs last and defaults to off.
     """
-    os.makedirs(root, exist_ok=True)
-    versions = snapshot_versions(root)
-    new_v = (versions[-1] + 1) if versions else 0
+    spark = df.sparkSession
+    present = storage.versions(spark, root, "v")
+    new_v = (present[-1] + 1) if present else 0
+    path = _snapshot_path(root, new_v)
     write_pages_layout(
-        df, os.path.join(root, f"v{new_v}"), n_buckets=n_buckets,
+        df, path, n_buckets=n_buckets,
         url_col=url_col, ts_col=ts_col, mode="errorifexists",
     )
-    tmp = os.path.join(root, "CURRENT.tmp")
-    with open(tmp, "w") as fh:
-        fh.write(f"v{new_v}\n")
-    os.replace(tmp, os.path.join(root, "CURRENT"))
-    # append-only publish log — retention must count PUBLISHED snapshots,
-    # not directories: a crash-orphan v* dir would otherwise displace a
-    # readable snapshot from the retained window
-    with open(os.path.join(root, "PUBLISHED"), "a") as fh:
-        fh.write(f"v{new_v}\n")
+    storage.commit(spark, path)
     if retain_last is not None and retain_last >= 1:
-        kept = set(published_versions(root)[-retain_last:]) | {new_v}
-        cutoff = min(kept)
-        # everything older than the oldest kept PUBLISHED version goes —
-        # published snapshots outside the window and stale orphans alike;
-        # orphans newer than the cutoff are left (a future publish skips
-        # their numbers anyway)
-        for old in snapshot_versions(root):
+        # retention counts published snapshots, not directories: a
+        # crash-orphan v* dir must not displace a readable snapshot from
+        # the window.  Everything older than the oldest kept published
+        # version goes — published snapshots outside the window and stale
+        # orphans alike; orphans newer than the cutoff are left (a future
+        # publish skips their numbers anyway)
+        cutoff = storage.versions(spark, root, "v", storage.COMMITTED)[-retain_last:][0]
+        for old in present:
             if old < cutoff:
-                shutil.rmtree(os.path.join(root, f"v{old}"),
-                              ignore_errors=True)
+                storage.delete(spark, _snapshot_path(root, old))
     return new_v
 
 
@@ -209,19 +171,19 @@ def read_pages_layout(spark: SparkSession, path: str) -> DataFrame:
     time (PartitionFilters in the scan, zero data files touched outside the
     selected day/bucket ranges).
 
-    If ``path`` is a snapshot root (has a ``CURRENT`` pointer), the
+    If ``path`` is a snapshot root (holds a committed ``v{n}``), the
     current snapshot is resolved at call time and the returned DataFrame
     is pinned to it: later publishes do not change what this DataFrame
     scans (snapshot-isolated reads)."""
-    cur = current_snapshot(path)
+    cur = storage.latest(spark, path, "v")
     if cur is not None:
-        path = os.path.join(path, f"v{cur}")
+        path = _snapshot_path(path, cur)
     return spark.read.parquet(path)
 
 
 def read_pages_snapshot(spark: SparkSession, root: str, version: int) -> DataFrame:
     """Time travel: read a specific published (or retained) snapshot."""
-    return spark.read.parquet(os.path.join(root, f"v{version}"))
+    return spark.read.parquet(_snapshot_path(root, version))
 
 
 def point_lookup(

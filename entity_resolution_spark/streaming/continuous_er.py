@@ -29,8 +29,6 @@ purges such blocks, and this path purges none.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -46,7 +44,7 @@ class ContinuousER:
                  prune_threshold: float = P.PRUNE_THRESHOLD,
                  compact_every: int = 1) -> None:
         self.spark = spark
-        self.state_dir = state_dir
+        self.state_dir = state_dir.rstrip("/")
         self.prune_threshold = prune_threshold
         # Re-crawl-heavy streams re-emit edges at growing weights; without
         # compaction the appended edge table grows with the re-crawl rate
@@ -54,10 +52,9 @@ class ContinuousER:
         # Every `compact_every` batches the table is rewritten deduped to
         # (id1, id2) at max weight; 0 disables.
         self.compact_every = compact_every
-        os.makedirs(state_dir, exist_ok=True)
 
     def _path(self, name: str) -> str:
-        return os.path.join(self.state_dir, name)
+        return f"{self.state_dir}/{name}"
 
     def _batch_blocks(self, batch: DataFrame) -> DataFrame:
         """The batch pipeline's blocking rule (``ERConfig().stages``), with no

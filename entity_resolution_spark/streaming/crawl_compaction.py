@@ -11,26 +11,27 @@ both paths over the same rows in different orders).
 
 Scale shape: state holds ONE row per canonical URL (not per snapshot), the
 per-batch work is one hash aggregate over (batch + state) co-keyed by URL,
-and the rewrite is crash-atomic: each batch writes a fresh versioned
-directory ``state_v{batch_id}`` and then atomically renames a one-line
-pointer file (``CURRENT``) over the old one — at every instant CURRENT
-names a complete, readable state directory, so a crash at any point
-resumes from either the pre-batch or post-batch state, never from empty
-(a swap that renames the live directory away before renaming the new one
-in has a window with NO state; replaying the batch after a crash there
-would re-fold n_versions from zero and undercount).  On a real cluster
-the state table would live in a table format with upserts (the aggregate
-is a textbook MERGE and the pointer file is exactly a snapshot pointer),
-but the fold logic is identical.
+and the rewrite is crash-atomic under the commit protocol of ``storage.py``:
+each batch writes a fresh versioned directory ``state_v{batch_id}``, then a
+``_COMMITTED`` marker into it, and only then deletes the superseded
+versions.  The live state is the highest committed version, and its number
+is the last applied batch id — so a crash at any point resumes from either
+the pre-batch or post-batch state, never from empty (a swap that renames
+the live directory away before renaming the new one in has a window with
+NO state; replaying the batch after a crash there would re-fold n_versions
+from zero and undercount).  Markers, listing and deletes go through the
+Hadoop FileSystem API, so ``state_dir`` may be a local path or a file://,
+hdfs:// or s3a:// URI.  On a real cluster the state table would live in a
+table format with upserts (the aggregate is a textbook MERGE and the marker
+is a snapshot commit), but the fold logic is identical.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import storage
 from ..functions.urls import canonical_url
 from ..operators.relational import latest_snapshot_per_key
 
@@ -41,45 +42,25 @@ class StreamingCrawlCompactor:
 
     def __init__(self, spark: SparkSession, state_dir: str) -> None:
         self.spark = spark
-        self.state_dir = state_dir
-        os.makedirs(state_dir, exist_ok=True)
-        self._pointer = os.path.join(state_dir, "CURRENT")
+        self.state_dir = state_dir.rstrip("/")
 
-    def _pointer_state(self) -> tuple[str | None, int]:
-        """(live versioned dir name, last applied batch id) from the
-        pointer file; (None, -1) before batch 0."""
-        try:
-            with open(self._pointer) as fh:
-                content = fh.read().strip()
-        except FileNotFoundError:
-            return None, -1
-        if not content:
-            return None, -1
-        name, _, bid = content.partition(" ")
-        try:
-            return name, int(bid)
-        except ValueError:  # pre-round-4 pointer without a batch id
-            return name, -1
-
-    def _current_version(self) -> str | None:
-        return self._pointer_state()[0]
+    def _path(self, batch_id: int) -> str:
+        return f"{self.state_dir}/state_v{batch_id}"
 
     def state(self) -> DataFrame | None:
-        name = self._current_version()
-        if name is None:
-            return None
-        return self.spark.read.parquet(os.path.join(self.state_dir, name))
+        applied = storage.latest(self.spark, self.state_dir, "state_v")
+        return None if applied is None else self.spark.read.parquet(self._path(applied))
 
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
         # Idempotent replay: foreachBatch re-delivers a batch when the
-        # stream crashed AFTER our pointer flip but BEFORE the streaming
-        # offset commit.  The pointer records the last applied batch id, so
-        # the replay is a no-op — without this, re-folding the batch onto
-        # the post-batch state would double-count n_versions, and writing
-        # state_v{batch_id} again would self-overwrite the directory the
-        # lazily-read state() DataFrame is scanning.
-        prev, last_applied = self._pointer_state()
-        if batch_id <= last_applied:
+        # stream crashed AFTER our commit but BEFORE the streaming offset
+        # commit.  The live version's number is the last applied batch id,
+        # so the replay is a no-op — without this, re-folding the batch
+        # onto the post-batch state would double-count n_versions, and
+        # writing state_v{batch_id} again would self-overwrite the
+        # directory the lazily-read state() DataFrame is scanning.
+        applied = storage.latest(self.spark, self.state_dir, "state_v")
+        if applied is not None and batch_id <= applied:
             return
         snaps = batch.select(
             canonical_url(F.col("url")).alias("canonical_url"),
@@ -125,25 +106,16 @@ class StreamingCrawlCompactor:
                     (-F.col("w.nid")).alias("keep_doc_id"),
                 )
             )
-        # Crash-atomic swap: write the new state as its own versioned dir,
-        # then flip the pointer file with an atomic rename-over (POSIX
-        # rename of a file onto an existing file is atomic).  Only after
-        # the pointer is durable do we delete superseded versions — a
-        # crash at ANY line leaves CURRENT naming a complete directory.
-        vname = f"state_v{batch_id}"
-        if vname == prev:  # orphan of a half-applied attempt (paranoia)
-            vname = f"state_v{batch_id}_retry"
-        new.write.mode("overwrite").parquet(os.path.join(self.state_dir, vname))
-        ptmp = self._pointer + ".tmp"
-        with open(ptmp, "w") as fh:
-            fh.write(f"{vname} {batch_id}")
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.rename(ptmp, self._pointer)
-        if prev is not None and prev != vname:
-            import shutil
-
-            shutil.rmtree(os.path.join(self.state_dir, prev), ignore_errors=True)
+        # Crash-atomic swap: write the new state as its own versioned dir
+        # (overwriting the orphan of a crashed attempt at this batch), commit
+        # it, and only then delete older versions — a crash at ANY line
+        # leaves the highest committed version complete.
+        path = self._path(batch_id)
+        new.write.mode("overwrite").parquet(path)
+        storage.commit(self.spark, path)
+        for old in storage.versions(self.spark, self.state_dir, "state_v"):
+            if old < batch_id:
+                storage.delete(self.spark, self._path(old))
 
     def attach(self, stream_df: DataFrame, checkpoint_dir: str):
         """Wire onto a streaming DataFrame of (url, warc_ts, doc_id)."""

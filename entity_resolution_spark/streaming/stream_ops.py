@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..functions import text as T
+from ..operators.blocking import block_key_rows
 
 
 def windowed_event_counts(
@@ -54,17 +55,24 @@ def streaming_exact_dedup(
     return fp.withWatermark(ts_col, watermark).dropDuplicates(["fp"])
 
 
+def _stream_block_keys(pages: DataFrame, ts_col: str, keep: list[str]) -> DataFrame:
+    """``keep`` + ``block_key`` rows of the batch ER blocking rule
+    (``ERConfig().stages``) over page titles.  No ``distinct``: on a stream
+    that would be unbounded state."""
+    from ..plans.pipeline import ERConfig
+
+    titled = pages.withColumn(ts_col, F.col(ts_col).cast("timestamp")).withColumn(
+        "title", T.title_of(F.col("text"))
+    )
+    return block_key_rows(titled, ERConfig().stages, keep)
+
+
 def streaming_block_sizes(
     pages: DataFrame, watermark: str = "1 hour", ts_col: str = "warc_ts"
 ) -> DataFrame:
-    """Per-window block-key sizes from title keys (hot-key monitor feed)."""
-    from ..functions.blocking_keys import phonetic_combination
-
-    keyed = pages.withColumn(ts_col, F.col(ts_col).cast("timestamp")).withColumn(
-        "title", T.title_of(F.col("text"))
-    ).select(
-        F.col(ts_col), F.explode(phonetic_combination(F.col("title"))).alias("block_key")
-    )
+    """Per-window block-key sizes under the ER blocking rule (hot-key
+    monitor feed)."""
+    keyed = _stream_block_keys(pages, ts_col, [ts_col])
     return (
         keyed.withWatermark(ts_col, watermark)
         .groupBy(F.window(ts_col, "1 hour").alias("w"), "block_key")
@@ -111,19 +119,8 @@ def incremental_candidate_pairs(pages: DataFrame, watermark: str = "1 hour",
                                 ts_col: str = "warc_ts") -> DataFrame:
     """Streaming candidate pairs: new page → block keys → pairs vs the
     block's previously-seen members (stateful, bounded per-block state)."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    from ..functions.blocking_keys import phonetic_combination
-
-    keyed = (
-        pages.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-        .withColumn("record_id", F.xxhash64("url"))
-        .withColumn("title", T.title_of(F.col("text")))
-        .select(
-            ts_col,
-            "record_id",
-            F.explode(phonetic_combination(F.col("title"))).alias("block_key"),
-        )
+    keyed = _stream_block_keys(
+        pages.withColumn("record_id", F.xxhash64("url")), ts_col, [ts_col, "record_id"]
     )
     return (
         keyed.withWatermark(ts_col, watermark)

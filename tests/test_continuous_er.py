@@ -90,3 +90,15 @@ def test_continuous_er_edge_table_stays_compact(spark, tmp_path):
     # and the assignment still groups the near-identical pair
     got = {r["component_id"] for r in cer.current_assignment().collect()}
     assert len(got) == 1
+
+
+def test_continuous_er_state_dir_as_file_uri(spark, tmp_path, monkeypatch):
+    """A file:// state dir is written through Spark at the real location;
+    nothing is created under the cwd."""
+    monkeypatch.chdir(tmp_path)
+    corpus = make_pages(n_entities=6)
+    cer = ContinuousER(spark, (tmp_path / "state").as_uri())
+    cer.process_batch(spark.createDataFrame(corpus.pages), 0)
+    assert cer.current_assignment().count() == len(corpus.pages)
+    assert (tmp_path / "state" / "assignment").exists()
+    assert not (tmp_path / "file:").exists()

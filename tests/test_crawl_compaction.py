@@ -122,8 +122,8 @@ def test_through_real_writestream(spark, tmp_path):
 
 def test_state_swap_is_crash_atomic(spark, tmp_path):
     """A crash at any point of the state swap must leave a readable state:
-    the versioned dir is written first, the pointer file is flipped with
-    one atomic rename, old versions are deleted only after."""
+    the versioned dir is written first, its commit marker next, old
+    versions are deleted only after."""
     import os
 
     sd = tmp_path / "state_crash"
@@ -132,7 +132,7 @@ def test_state_swap_is_crash_atomic(spark, tmp_path):
     before = _snapshot(c)
 
     # simulate a crash AFTER the new versioned dir was written but BEFORE
-    # the pointer flip: an orphan state_v99 exists, CURRENT still names v0
+    # its commit marker: an orphan state_v99 exists, v0 is still current
     orphan = sd / "state_v99"
     _batch_df(spark, _rows(5)).write.mode("overwrite").parquet(str(orphan))
     assert _snapshot(c) == before  # recovery reads the pre-crash state
@@ -144,10 +144,8 @@ def test_state_swap_is_crash_atomic(spark, tmp_path):
     # normal processing resumes and folds on top of the pre-crash state
     c.process_batch(_batch_df(spark, _rows(40)[20:]), 1)
     assert _snapshot(c) == _batch_result(spark, _rows(40))
-    # superseded version was cleaned up; CURRENT names an existing dir
-    # (pointer format: "<dirname> <last_applied_batch_id>")
-    cur = (sd / "CURRENT").read_text().split()[0]
-    assert (sd / cur).exists()
+    # superseded version was cleaned up; state_v1 is the only committed one
+    assert [p.parent.name for p in sd.glob("*/_COMMITTED")] == ["state_v1"]
     assert not (sd / "state_v0").exists()
 
 
@@ -177,3 +175,20 @@ def test_replayed_batch_is_idempotent(spark, tmp_path):
     assert _snapshot(c) == _batch_result(
         spark, rows + rows[:10] + _rows(40)[20:]
     )
+
+
+def test_state_dir_as_file_uri(spark, tmp_path, monkeypatch):
+    """A file:// state dir is handled as a URI, not a local relative path:
+    no stray ``file:`` directory under the cwd, superseded state deleted
+    at the real location, replay still a no-op."""
+    monkeypatch.chdir(tmp_path)
+    sd = tmp_path / "st"
+    c = StreamingCrawlCompactor(spark, sd.as_uri())
+    rows = _rows(40)
+    c.process_batch(_batch_df(spark, rows[:20]), 0)
+    c.process_batch(_batch_df(spark, rows[20:]), 1)
+    c.process_batch(_batch_df(spark, rows[20:]), 1)
+    assert _snapshot(c) == _batch_result(spark, rows)
+    assert (sd / "state_v1").exists()
+    assert not (sd / "state_v0").exists()
+    assert not (tmp_path / "file:").exists()

@@ -287,3 +287,29 @@ def test_retain_last_counts_published_snapshots_not_orphans(spark, tmp_path):
     assert snapshot_versions(root) == [3, 4]
     assert published_versions(root) == [3, 4]
     assert read_pages_snapshot(spark, root, 3).count() == 100
+
+
+def test_publish_to_file_uri_root(spark, tmp_path, monkeypatch):
+    """A file:// snapshot root is handled as a URI end to end: publish,
+    current snapshot, time travel and retention act on the real location,
+    and no stray ``file:`` directory appears under the cwd."""
+    from entity_resolution_spark.sources.layout import (
+        current_snapshot,
+        publish_pages_layout,
+        read_pages_snapshot,
+        snapshot_versions,
+    )
+
+    monkeypatch.chdir(tmp_path)
+    root = (tmp_path / "pages").as_uri()
+    publish_pages_layout(_pages(spark, n=100), root, n_buckets=N_BUCKETS)
+    publish_pages_layout(_pages(spark, n=250), root, n_buckets=N_BUCKETS)
+    assert current_snapshot(root) == 1
+    assert read_pages_layout(spark, root).count() == 250
+    assert read_pages_snapshot(spark, root, 0).count() == 100
+    assert publish_pages_layout(_pages(spark, n=50), root,
+                                n_buckets=N_BUCKETS, retain_last=1) == 2
+    assert snapshot_versions(root) == [2]
+    assert sorted(p.name for p in (tmp_path / "pages").glob("v*")) == ["v2"]
+    assert read_pages_layout(spark, root).count() == 50
+    assert not (tmp_path / "file:").exists()
