@@ -357,6 +357,12 @@ def pq_fixed_codebooks(
     return np.round(rs.uniform(-scale, scale, (m, ksub, dsub)), 6)
 
 
+# Most query vectors ``pq_topk`` collects.  Each ADC scan batch holds an
+# (n_queries x Arrow batch) float64 distance matrix: 82 MB per task at 1,024
+# queries and 10,000-row batches.  ``ann_pq_topk`` collects 10 at every SF.
+PQ_MAX_QUERIES = 1024
+
+
 def pq_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -387,8 +393,9 @@ def pq_topk(
 
     * the corpus is read ONCE to produce codes (Arrow-batched UDF); full
       vectors never shuffle — the codes table is ``m`` bytes + id per row;
-    * the query side (assumed small, as in ``cosine_topk``) is collected and
-      shipped as a broadcast of per-query LUTs (``n_q x m x ksub`` float64);
+    * the query side (at most ``PQ_MAX_QUERIES`` rows, else ``ValueError``)
+      is collected and shipped as a broadcast of per-query LUTs
+      (``n_q x m x ksub`` float64);
     * ``mapInPandas`` over the codes emits each batch's top-``rerank`` per
       query — two-phase top-k (per-batch then global) is EXACT for the
       (dist, id) ordering, so the candidate set is partition-invariant;
@@ -432,9 +439,17 @@ def pq_topk(
         F.col(id_col).alias("neighbor_id"), encode(F.col(vec_col)).alias("codes")
     )
 
-    qrows = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-    ).collect()
+    qrows = (
+        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
+        .limit(PQ_MAX_QUERIES + 1)
+        .collect()
+    )
+    if len(qrows) > PQ_MAX_QUERIES:
+        raise ValueError(
+            f"more than PQ_MAX_QUERIES={PQ_MAX_QUERIES} query vectors; pq_topk "
+            "collects the queries and scans every corpus batch against all of "
+            "them — split the queries into batches of at most that many"
+        )
     if not qrows:
         return spark.createDataFrame(
             [], "query_id long, neighbor_id long, cosine double"

@@ -12,13 +12,14 @@ Layout under ``base_dir``::
 
     <base>/<run_id>/stages/<stage_name>/          parquet stage output
     <base>/<run_id>/stages/<stage_name>/_METRICS/ per-partition lineage rows
-    <base>/<run_id>/stages/<stage_name>/_STAGE_METRICS.json  rows, seconds
+    <base>/<run_id>/stages/<stage_name>/_STAGE_METRICS.json  rows, seconds,
+                                                             codegen_compiles
 
 A stage is *done* iff its ``_SUCCESS`` marker exists; ``stage()`` then reads
 the snapshot instead of recomputing — restartable from any point mid-run.
 Metrics rows: one per output partition (partition id, row count) plus a
-stage-level row (wall seconds, total rows) — the lineage a monitoring job
-aggregates.
+stage-level row (wall seconds, total rows, generated classes compiled) — the
+lineage a monitoring job aggregates.
 """
 
 from __future__ import annotations
@@ -30,6 +31,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import codegen_compiles
 from ..storage import delete, hadoop_fs, write_committed
 
 
@@ -51,15 +53,21 @@ class StageCheckpointer:
         """Return the stage output, computing+persisting it only if missing.
 
         On compute: write parquet, record per-partition lineage (partition id
-        → row count) and stage metrics (rows, seconds) beside the data.
+        → row count) and stage metrics (rows, seconds, codegen_compiles)
+        beside the data.  ``codegen_compiles`` is the number of classes Spark
+        compiled across the stage's build and write: it counts every compile
+        in the driver JVM, which in local mode includes executor tasks (and
+        any other job running at the same time).
         """
         path = self._stage_path(name)
         if self.is_done(name):
             return self.spark.read.parquet(path)
         t0 = time.perf_counter()
+        c0 = codegen_compiles(self.spark)
         df = build()
         df.write.mode("overwrite").parquet(path)
         seconds = time.perf_counter() - t0
+        compiles = codegen_compiles(self.spark) - c0
         out = self.spark.read.parquet(path)
         lineage = (
             out.groupBy(F.spark_partition_id().alias("partition_id"))
@@ -73,6 +81,7 @@ class StageCheckpointer:
             "stage": name,
             "rows": out.count(),
             "seconds": round(seconds, 3),
+            "codegen_compiles": compiles,
         }
         fs, hpath = hadoop_fs(self.spark, f"{path}/_STAGE_METRICS.json")
         stream = fs.create(hpath, True)

@@ -39,14 +39,21 @@ def page_features(pages: DataFrame) -> DataFrame:
     )
 
 
+# Most labeled pairs ``training_pairs_from_labels`` collects.  Training runs on
+# the driver at ~0.34 ms per pair per epoch (one core of a shared 4-vCPU Intel
+# Xeon VM), so the cap bounds the default 40 epochs to ~2.3 min.
+LABEL_MAX_ROWS = 10_000
+
+
 def training_pairs_from_labels(
     features: DataFrame, labels: DataFrame
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """labels (url1, url2, is_match) + per-page features → (X1, X2, y) arrays.
 
     y follows the reference contrastive convention: 0 = similar, 1 = dissimilar
-    (``model_loss_classes.py:61-73``).  Collect is bounded: the labeled pair
-    set is a sampling product, not the full candidate space.
+    (``model_loss_classes.py:61-73``).  The labeled pair set is a sampling
+    product, not the full candidate space, and the collect is a driver-side
+    contract: it fetches ``LABEL_MAX_ROWS + 1`` rows and fails past the cap.
     """
     f1 = features.select(
         F.col("url").alias("url1"), *[F.col(c).alias(f"a_{c}") for c in E.INPUT_COLS]
@@ -54,7 +61,14 @@ def training_pairs_from_labels(
     f2 = features.select(
         F.col("url").alias("url2"), *[F.col(c).alias(f"b_{c}") for c in E.INPUT_COLS]
     )
-    rows = labels.join(f1, "url1").join(f2, "url2").collect()
+    rows = (
+        labels.join(f1, "url1").join(f2, "url2").limit(LABEL_MAX_ROWS + 1).collect()
+    )
+    if len(rows) > LABEL_MAX_ROWS:
+        raise ValueError(
+            f"more than LABEL_MAX_ROWS={LABEL_MAX_ROWS} labeled pairs; encoder "
+            "training runs on the driver — sample the labels first"
+        )
     X1 = np.array([[r[f"a_{c}"] for c in E.INPUT_COLS] for r in rows])
     X2 = np.array([[r[f"b_{c}"] for c in E.INPUT_COLS] for r in rows])
     y = np.array([0.0 if r["is_match"] else 1.0 for r in rows])

@@ -28,6 +28,21 @@ DEFAULT_CONFS: dict[str, str] = {
     # Deterministic timestamps regardless of host zone.
     "spark.sql.session.timeZone": "UTC",
     "spark.ui.enabled": "false",
+    # Generated-class cache (a static conf: set when the session is built).
+    # Spark's default of 100 is below one warm request's working set, so LRU
+    # eviction recompiled every class on every warm request.  Classes compiled
+    # per call (codegen_compiles deltas; local[4], shared 4-vCPU Intel Xeon
+    # VM), at 100 -> 2048:
+    #   ER request (resolve + score + evaluate, 60 entities) alternating with
+    #     prepared_corpus at sf0.001, warm rounds: 110 + 122 -> 0 + 0;
+    #   all 71 driver queries at sf0.001, two passes: 1208, 1192 -> 919, 8
+    #     (second pass 67.0 -> 55.3 s).
+    # 2048 is the smallest power of two at least twice the 919-class working
+    # set: Guava's cache evicts per segment, before it is full.  Classes
+    # average ~3 KB of bytecode (max 24 KB), a few MB in all.  To re-measure,
+    # pass a huge value through get_spark(extra_confs=...) and count a first
+    # pass of the calls.
+    "spark.sql.codegen.cache.maxEntries": "2048",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
 }
 
@@ -57,3 +72,10 @@ def get_spark(
     for k, v in confs.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Classes Spark's code generator has compiled in this driver JVM so far
+    (``CodegenMetrics``); in local mode that includes executor tasks."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()

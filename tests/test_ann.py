@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from entity_resolution_spark.operators import ann
@@ -108,6 +109,16 @@ def test_pq_parity_mode_full_rerank_equals_bruteforce(spark):
         )
     )
     assert pq == exact
+
+
+def test_pq_topk_query_collect_is_capped(spark, monkeypatch):
+    emb = _clustered_embeddings(spark)
+    books = ann.pq_fixed_codebooks(m=4, ksub=16, dsub=4)
+    monkeypatch.setattr(ann, "PQ_MAX_QUERIES", 3)
+    with pytest.raises(ValueError, match="PQ_MAX_QUERIES=3"):
+        ann.pq_topk(
+            emb.where(F.col("vec_id") < 4), emb, k=2, m=4, ksub=16, codebooks=books
+        )
 
 
 def test_pq_partition_invariant(spark):

@@ -4,6 +4,7 @@ matches from hard negatives better than the untrained encoder."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from entity_resolution_spark.ml import encoder as E
@@ -41,3 +42,12 @@ def test_trained_encoder_beats_random_init(spark):
     auroc_random = _auroc_with(spark, pages, labels_ids, E.init_weights())
     assert auroc_trained > 0.85, (auroc_trained, auroc_random)
     assert auroc_trained >= auroc_random - 0.02  # never materially worse
+
+
+def test_label_collect_is_capped(spark, monkeypatch):
+    corpus = make_pages(n_entities=10)
+    pages = spark.createDataFrame(corpus.pages)
+    labels = spark.createDataFrame(corpus.labels)
+    monkeypatch.setattr(EP, "LABEL_MAX_ROWS", 2)
+    with pytest.raises(ValueError, match="LABEL_MAX_ROWS=2"):
+        EP.training_pairs_from_labels(EP.page_features(pages), labels)

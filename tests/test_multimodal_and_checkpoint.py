@@ -198,6 +198,21 @@ def test_checkpoint_resume_on_uri_base_dir(spark, tmp_path, monkeypatch):
     assert not ckpt.is_done("03_pruned") and ckpt.is_done("04_components")
 
 
+def test_checkpoint_records_codegen_compiles(spark, tmp_path):
+    """Every stage record counts the classes compiled for it; a second run
+    of the same plan in one session reuses the cached classes."""
+    pages = spark.createDataFrame(make_pages(n_entities=10).pages)
+    totals = []
+    for run_id in ("run1", "run2"):
+        ckpt = StageCheckpointer(spark, str(tmp_path), run_id)
+        resolve_checkpointed(pages, ckpt).collect()
+        metrics = ckpt.metrics()
+        assert len(metrics) == 5
+        assert all(isinstance(m["codegen_compiles"], int) for m in metrics)
+        totals.append(sum(m["codegen_compiles"] for m in metrics))
+    assert totals[1] <= totals[0], totals
+
+
 def test_bmp_8bit_partial_palette():
     """Spec-valid 8-bit BMP with biClrUsed=16 (64-byte palette)."""
     import struct
