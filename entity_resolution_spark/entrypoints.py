@@ -26,6 +26,20 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 _PKG_DIR = os.path.dirname(os.path.abspath(__file__))
 
 
+def write_package_zip(zip_path: str) -> str:
+    """Zip every ``.py`` file of this package under ``entity_resolution_spark/``:
+    the archive both ``spark-submit --py-files`` and :func:`ensure_shipped`
+    ship to executors."""
+    top = os.path.dirname(_PKG_DIR)
+    with zipfile.ZipFile(zip_path, "w") as zf:
+        for root, _dirs, files in os.walk(_PKG_DIR):
+            for fn in files:
+                if fn.endswith(".py"):
+                    full = os.path.join(root, fn)
+                    zf.write(full, os.path.relpath(full, top))
+    return zip_path
+
+
 def ensure_shipped(spark: SparkSession) -> None:
     """Ship this package to executor Python workers (``--py-files`` analog).
 
@@ -39,16 +53,7 @@ def ensure_shipped(spark: SparkSession) -> None:
         return
     fd, zip_path = tempfile.mkstemp(suffix=".zip", prefix="er_spark_pkg_")
     os.close(fd)
-    with zipfile.ZipFile(zip_path, "w") as zf:
-        for root, _dirs, files in os.walk(_PKG_DIR):
-            for fn in files:
-                if fn.endswith(".py"):
-                    full = os.path.join(root, fn)
-                    rel = os.path.join(
-                        "entity_resolution_spark", os.path.relpath(full, _PKG_DIR)
-                    )
-                    zf.write(full, rel)
-    spark.sparkContext.addPyFile(zip_path)
+    spark.sparkContext.addPyFile(write_package_zip(zip_path))
     spark.conf.set("spark.er.pkgShipped", "1")
 
 _TITLE_SQL = "split_part(text, ' ', 1)"

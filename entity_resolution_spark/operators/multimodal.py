@@ -8,22 +8,19 @@ codec step is pluggable:
 
 * a **deterministic synthetic codec** (``IMG1``/``AUD1``/``VID1`` headers,
   raw payload) used by tests and fixtures,
-* **dependency-free real codecs**: PNG (8-bit gray/RGB/RGBA/palette —
-  stdlib zlib inflate + scanline unfiltering incl. Paeth), JPEG in both
-  sequential (SOF0/SOF1) and progressive (SOF2) DCT modes
-  (operators/jpeg.py), GIF87a/89a (operators/gif.py — LZW + interlace),
-  uncompressed BMP (8-bit palette and 24-bit BGR), binary PGM (P5) /
-  PPM (P6), RIFF/WAVE PCM-16 audio, FLAC lossless audio
-  (operators/flac.py — RFC 9639 fixed/LPC prediction + Rice coding),
-  and MJPEG video in both AVI and MP4/ISO-BMFF containers
-  (operators/mp4.py walks the full stsd/stsz/stsc/stco sample table;
-  compressed-codec samples like avc1 stay behind the plug point) —
+* **dependency-free real codecs** for the uncompressed and zlib-only
+  formats: PNG (8-bit gray/RGB/RGBA/palette — stdlib zlib inflate +
+  scanline unfiltering incl. Paeth), uncompressed BMP (8-bit palette and
+  24-bit BGR), binary PGM (P5) / PPM (P6) and RIFF/WAVE PCM-16 audio —
   parsed with ``zlib``/``struct``/``numpy`` only, and
-* a clearly-marked hook that raises ``NotImplementedError`` for the
-  remaining formats (webp/avif, MP3/AAC, H.264/HEVC samples — genuinely
-  codec-library territory); on a real cluster you plug Pillow/ffmpeg via
+* a clearly-marked hook that raises ``NotImplementedError`` for every other
+  format (JPEG/GIF/webp, FLAC/MP3/AAC, AVI/MP4 video — codec-library
+  territory); on a real cluster you plug Pillow/ffmpeg via
   ``register_decoder`` WITHOUT touching any Spark code, and registered
-  decoders override the built-in pure-python paths.
+  decoders override the built-in pure-python PNG path.
+
+The PNG writer :func:`encode_png` is also what the S7 plot sinks
+(``plans/plots.py``) emit their figures with.
 """
 
 from __future__ import annotations
@@ -315,8 +312,8 @@ def _decode_wav(data: bytes) -> tuple[int, np.ndarray]:
 # ---------------------------------------------------------------------------
 # Real-codec plug point
 # ---------------------------------------------------------------------------
-# Compressed-format codecs (JPEG/PNG via Pillow, MP3/AAC via soundfile,
-# MP4 via ffmpeg) are not in this container.  They drop in WITHOUT touching
+# Compressed-format codecs (JPEG/GIF via Pillow, FLAC/MP3 via soundfile,
+# AVI/MP4 via ffmpeg) are not built in.  They drop in WITHOUT touching
 # any Spark code through this registry: a decoder takes the raw bytes and
 # returns the decoded tuple, or None to decline the format.  The Spark
 # operators capture the registered decoders into their UDF closures at plan
@@ -346,22 +343,14 @@ def decode_image_bytes(data: bytes, extra=()) -> tuple[int, int, np.ndarray]:
         return _decode_bmp(data)
     if data[:2] in (b"P5", b"P6"):
         return _decode_pnm(data)
-    # registered codecs OVERRIDE the built-in compressed decoders: plugging
-    # Pillow/turbojpeg in replaces the correctness-first pure-python paths
+    # registered codecs OVERRIDE the built-in PNG decoder: plugging Pillow in
+    # replaces the correctness-first pure-python path
     for dec in extra or _EXTRA_DECODERS["image"]:
         out = dec(data)
         if out is not None:
             return out
     if data[:8] == PNG_SIG:
         return _decode_png(data)
-    if data[:2] == b"\xff\xd8":
-        from .jpeg import decode_jpeg
-
-        return decode_jpeg(data)
-    if data[:6] in (b"GIF87a", b"GIF89a"):
-        from .gif import decode_gif
-
-        return decode_gif(data)
     raise NotImplementedError(
         "unrecognized image format; register a codec via "
         "multimodal.register_decoder('image', fn)"
@@ -379,92 +368,10 @@ def decode_audio_bytes(data: bytes, extra=()) -> tuple[int, np.ndarray]:
         out = dec(data)
         if out is not None:
             return out
-    if data[:4] == b"fLaC":
-        from .flac import decode_flac
-
-        sr, bps, pcm = decode_flac(data)
-        mono = pcm.astype(np.int64)
-        if mono.shape[1] > 1:
-            mono = mono.mean(axis=1).astype(np.int64)
-        else:
-            mono = mono.reshape(-1)
-        if bps != 16:  # scale to the 16-bit range the stage standardizes on
-            mono = mono >> (bps - 16) if bps > 16 else mono << (16 - bps)
-        return sr, mono.astype(np.int16)
     raise NotImplementedError(
-        "compressed audio codecs (MP3/AAC) not available in this container; "
+        "compressed audio codecs (FLAC/MP3/AAC) are not built in; "
         "register one via multimodal.register_decoder('audio', fn)"
     )
-
-
-def encode_avi_mjpeg(frames_jpeg: list[bytes], width: int, height: int,
-                     fps: int = 25) -> bytes:
-    """Minimal RIFF/AVI container holding MJPEG frames (one '00dc' chunk
-    per pre-encoded JPEG).  Fixture counterpart of the AVI branch in
-    :func:`decode_video_bytes`; headers carry just what the decoder and
-    common players need (avih + strh/strf with MJPG fourcc)."""
-
-    def chunk(tag: bytes, body: bytes) -> bytes:
-        pad = b"\x00" if len(body) % 2 else b""
-        return tag + struct.pack("<I", len(body)) + body + pad
-
-    def lst(kind: bytes, body: bytes) -> bytes:
-        return chunk(b"LIST", kind + body)
-
-    n = len(frames_jpeg)
-    avih = struct.pack(
-        "<IIIIIIIIIIIIII",
-        1_000_000 // fps, 0, 0, 0x10, n, 0, 1, 0, width, height, 0, 0, 0, 0,
-    )
-    strh = (
-        b"vids" + b"MJPG" + struct.pack("<IHHIIIIIIIII", 0, 0, 0, 0, 1, fps,
-                                        0, n, 0, 0, 0, 0)
-    )
-    # BITMAPINFOHEADER with biCompression = 'MJPG' at byte offset 16
-    strf = struct.pack("<IiiHH", 40, width, height, 1, 24) + b"MJPG" + \
-        struct.pack("<IiiII", width * height * 3, 0, 0, 0, 0)
-    hdrl = lst(b"hdrl", chunk(b"avih", avih)
-               + lst(b"strl", chunk(b"strh", strh) + chunk(b"strf", strf)))
-    movi = lst(b"movi", b"".join(chunk(b"00dc", f) for f in frames_jpeg))
-    riff_body = b"AVI " + hdrl + movi
-    return b"RIFF" + struct.pack("<I", len(riff_body)) + riff_body
-
-
-def _decode_avi_mjpeg(data: bytes) -> tuple[int, int, list[np.ndarray]]:
-    """RIFF/AVI chunk walk: decode every '00dc'/'01dc' MJPEG frame with the
-    baseline JPEG decoder.  Non-MJPEG AVI (raw DIB, other fourccs) and
-    frames our JPEG baseline can't handle raise ``NotImplementedError``."""
-    from .jpeg import decode_jpeg
-
-    if data[8:12] != b"AVI ":
-        raise NotImplementedError("not an AVI file")
-    frames: list[np.ndarray] = []
-    w = h = None
-
-    def walk(pos: int, end: int):
-        nonlocal w, h
-        while pos + 8 <= end:
-            tag = data[pos : pos + 4]
-            size = struct.unpack("<I", data[pos + 4 : pos + 8])[0]
-            body_start = pos + 8
-            if tag == b"LIST":
-                walk(body_start + 4, body_start + size)
-            elif tag[2:4] == b"dc":
-                frame = data[body_start : body_start + size]
-                if frame[:2] != b"\xff\xd8":
-                    raise NotImplementedError(
-                        "AVI stream is not MJPEG; plug ffmpeg via "
-                        "register_decoder('video', fn)"
-                    )
-                fw, fh, px = decode_jpeg(frame)
-                w, h = fw, fh
-                frames.append(px)
-            pos = body_start + size + (size & 1)
-
-    walk(12, len(data))
-    if not frames:
-        raise NotImplementedError("AVI contains no video frames")
-    return w, h, frames
 
 
 def decode_video_bytes(data: bytes, extra=()) -> tuple[int, int, list[np.ndarray]]:
@@ -476,18 +383,11 @@ def decode_video_bytes(data: bytes, extra=()) -> tuple[int, int, list[np.ndarray
             frames.append(np.frombuffer(data[off : off + w * h], dtype=np.uint8).reshape(h, w))
             off += w * h
         return w, h, frames
-    # registered codecs override the built-in container parsers (same
-    # contract as images: plugging ffmpeg in replaces the pure-python path)
+    # compressed containers (AVI/MP4) are registered codecs' territory
     for dec in extra or _EXTRA_DECODERS["video"]:
         out = dec(data)
         if out is not None:
             return out
-    if data[:4] == b"RIFF" and data[8:12] == b"AVI ":
-        return _decode_avi_mjpeg(data)
-    if data[4:8] == b"ftyp":
-        from .mp4 import decode_mp4_mjpeg
-
-        return decode_mp4_mjpeg(data)
     raise NotImplementedError(
         "unrecognized video container; register a codec via "
         "multimodal.register_decoder('video', fn)"

@@ -2,8 +2,8 @@
 
 The reference renders matplotlib figures for the blocking graph
 (``block_klsh/blocking/graph_visualization.py:6-66``) and training/metric
-curves (``perf_metrics/plots.py:28-583``).  matplotlib is not in this
-container, so these sinks rasterize onto a numpy canvas and emit the PNG with
+curves (``perf_metrics/plots.py:28-583``).  The package does not depend on
+matplotlib, so these sinks rasterize onto a numpy canvas and emit the PNG with
 ``operators.multimodal.encode_png`` (stdlib ``zlib``/``struct`` only).  The
 Spark contract is the important part: every plot collects a *bounded*
 summary (component sample caps, pre-aggregated histogram bins, per-epoch

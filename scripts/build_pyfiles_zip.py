@@ -7,22 +7,12 @@ from __future__ import annotations
 
 import os
 import sys
-import zipfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
-
-def build(out_path: str) -> str:
-    pkg = os.path.join(REPO, "entity_resolution_spark")
-    with zipfile.ZipFile(out_path, "w") as zf:
-        for root, _dirs, files in os.walk(pkg):
-            for fn in files:
-                if fn.endswith(".py"):
-                    full = os.path.join(root, fn)
-                    zf.write(full, os.path.relpath(full, REPO))
-    return out_path
-
+from entity_resolution_spark.entrypoints import write_package_zip  # noqa: E402
 
 if __name__ == "__main__":
     out = sys.argv[1] if len(sys.argv) > 1 else "/tmp/er_pkg.zip"
-    print(build(out))
+    print(write_package_zip(out))

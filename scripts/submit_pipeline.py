@@ -9,7 +9,10 @@ multi-executor clusters"):
 
 Reads the pages table, runs extract → block → meta-block → prune → CC
 (checkpointed + resumable when a checkpoint dir is given), writes the entity
-assignment parquet and prints a one-line JSON summary.
+assignment parquet and prints a one-line JSON summary, which includes the
+session's effective value of each ``session.DEFAULT_CONFS`` key it applies.
+Those defaults apply wherever spark-submit's ``--conf`` (or spark-defaults.conf)
+leaves a key unset.
 """
 
 from __future__ import annotations
@@ -23,9 +26,21 @@ def main() -> None:
     pages_path, out_path = sys.argv[1], sys.argv[2]
     ckpt_dir = sys.argv[3] if len(sys.argv) > 3 else None
 
+    from pyspark import SparkConf, SparkContext
     from pyspark.sql import SparkSession
 
-    spark = SparkSession.builder.appName("er-submit").getOrCreate()
+    from entity_resolution_spark.session import DEFAULT_CONFS
+
+    # The driver JVM is already running, so its heap comes from spark-submit's
+    # --driver-memory, not from DEFAULT_CONFS.
+    confs = {k: v for k, v in DEFAULT_CONFS.items() if k != "spark.driver.memory"}
+    # Attach to spark-submit's JVM first so SparkConf() loads its --master and
+    # --conf values; the engine's defaults then fill only the keys left unset.
+    SparkContext._ensure_initialized()
+    conf = SparkConf()
+    for key, value in confs.items():
+        conf.setIfMissing(key, value)
+    spark = SparkSession.builder.appName("er-submit").config(conf=conf).getOrCreate()
     # When launched via spark-submit --py-files the package is already on
     # every executor's path; ensure_shipped is a no-op safety net for other
     # launchers.
@@ -50,6 +65,7 @@ def main() -> None:
         "rows": done.count(),
         "entities": done.select("component_id").distinct().count(),
         "seconds": round(time.perf_counter() - t0, 3),
+        "confs": {key: spark.conf.get(key) for key in confs},
     }
     spark.stop()
     print("SUBMIT_RESULT " + json.dumps(summary))

@@ -60,8 +60,8 @@ def test_real_codec_hook_raises(spark):
     # a truncated PNG now reaches the real decoder and fails there
     with pytest.raises(NotImplementedError, match="IHDR"):
         MM.decode_image_bytes(b"\x89PNG\r\n\x1a\n....")
-    # a truncated GIF reaches the real GIF decoder (magic matches)
-    with pytest.raises(NotImplementedError, match="GIF"):
+    # GIF has no built-in decoder: it reaches the plug-point error
+    with pytest.raises(NotImplementedError, match="register_decoder"):
         MM.decode_image_bytes(b"GIF89a......")
     # a genuinely unknown format falls through to the plug-point error
     with pytest.raises(NotImplementedError, match="register"):
@@ -279,11 +279,9 @@ def test_registered_codec_flows_end_to_end(spark):
         assert (a["sample_rate"], a["n_samples"]) == (8000, 2)
     finally:
         MM.clear_decoders()
-    # with the registry cleared, the same bytes fall through to the REAL
-    # baseline JPEG decoder (they carry its magic), which rejects them as
-    # structurally invalid — the plug-point error is reserved for formats
-    # no built-in decoder claims
-    with pytest.raises(NotImplementedError, match="JPEG"):
+    # with the registry cleared, no built-in decoder claims JPEG magic, so
+    # the same bytes reach the plug-point error
+    with pytest.raises(NotImplementedError, match="register_decoder"):
         MM.decode_image_bytes(b"\xff\xd8" + bytes(range(6)))
 
 
@@ -427,213 +425,6 @@ def test_png_through_spark(spark):
     assert (w, h) == (5, 4) and px2.shape == (4, 5)
 
 
-# --- JPEG (baseline, numpy-only) ---------------------------------------------
-
-def test_jpeg_gray_round_trip():
-    from entity_resolution_spark.operators.jpeg import encode_jpeg_gray
-
-    rng = np.random.default_rng(42)
-    grad = (np.add.outer(np.arange(24) * 3, np.arange(40) * 2) % 256).astype(
-        np.uint8
-    )
-    noise = rng.integers(0, 256, size=(17, 23), dtype=np.uint8)
-    for img in (grad, noise):
-        w, h, out = MM.decode_image_bytes(encode_jpeg_gray(img, quant=1))
-        assert (w, h) == (img.shape[1], img.shape[0])
-        # quant=1: error bounded by DCT float rounding
-        assert np.abs(out.astype(int) - img.astype(int)).max() <= 2
-
-
-def test_jpeg_420_color_round_trip():
-    """Interleaved-MCU + chroma-subsampling decode path: 4:2:0 color with
-    known Y plane; decoder returns the luma within rounding."""
-    from entity_resolution_spark.operators.jpeg import encode_jpeg_ycbcr420
-
-    rng = np.random.default_rng(9)
-    for hw in [(16, 16), (24, 40), (17, 23)]:  # exact + padded MCU grids
-        y = rng.integers(0, 256, size=hw, dtype=np.uint8)
-        ch, cw = (hw[0] + 1) // 2, (hw[1] + 1) // 2
-        cb = rng.integers(0, 256, size=(ch, cw), dtype=np.uint8)
-        cr = rng.integers(0, 256, size=(ch, cw), dtype=np.uint8)
-        w, h, out = MM.decode_image_bytes(encode_jpeg_ycbcr420(y, cb, cr))
-        assert (w, h) == (hw[1], hw[0])
-        assert np.abs(out.astype(int) - y.astype(int)).max() <= 2
-
-
-def test_jpeg_unsupported_modes_raise():
-    from entity_resolution_spark.operators.jpeg import encode_jpeg_gray
-
-    base = bytearray(encode_jpeg_gray(np.zeros((8, 8), dtype=np.uint8)))
-    i = base.find(b"\xff\xc0")
-    # lossless (SOF3) and arithmetic-coded (SOFA) stay unsupported
-    for sof in (0xC3, 0xCA):
-        data = bytearray(base)
-        data[i + 1] = sof
-        with pytest.raises(NotImplementedError, match="SOF"):
-            MM.decode_image_bytes(bytes(data))
-    # a baseline-shaped scan header under an SOF2 frame is corrupt
-    # progressive data (DC scan must have Se=0) — contract error, not a
-    # silent mis-decode
-    data = bytearray(base)
-    data[i + 1] = 0xC2
-    with pytest.raises(NotImplementedError):
-        MM.decode_image_bytes(bytes(data))
-
-
-def test_jpeg_sof1_extended_sequential_decodes_as_baseline():
-    """SOF1 (extended sequential) is bit-identical to SOF0 at 8-bit
-    precision; real crawl files occasionally declare it."""
-    from entity_resolution_spark.operators.jpeg import decode_jpeg, encode_jpeg_gray
-
-    rng = np.random.default_rng(21)
-    img = rng.integers(0, 256, size=(16, 24), dtype=np.uint8)
-    data = bytearray(encode_jpeg_gray(img, quant=1))
-    i = data.find(b"\xff\xc0")
-    data[i + 1] = 0xC1
-    w, h, out = decode_jpeg(bytes(data))
-    assert (w, h) == (24, 16)
-    assert np.abs(out.astype(int) - img.astype(int)).max() <= 2
-
-
-def test_jpeg_through_spark(spark):
-    from entity_resolution_spark.operators.jpeg import encode_jpeg_gray
-
-    rng = np.random.default_rng(3)
-    rows = []
-    for i in range(3):
-        px = rng.integers(0, 256, size=(8, 16), dtype=np.uint8)
-        rows.append((i, bytearray(encode_jpeg_gray(px)), px))
-    df = spark.createDataFrame(
-        [(i, b) for i, b, _ in rows], "doc_id long, image binary"
-    )
-    feats = {r["doc_id"]: r for r in MM.image_features(df).collect()}
-    for i, _, px in rows:
-        assert (feats[i]["width"], feats[i]["height"]) == (16, 8)
-        assert abs(feats[i]["mean_luma"] - px.mean()) <= 2
-
-
-def test_avi_mjpeg_round_trip_and_frame_sample(spark):
-    """Real video container: MJPEG-in-AVI through decode + the Spark
-    frame-sampling operator."""
-    from entity_resolution_spark.operators.jpeg import encode_jpeg_gray
-
-    rng = np.random.default_rng(4)
-    frames = [rng.integers(0, 256, size=(16, 24), dtype=np.uint8)
-              for _ in range(6)]
-    avi = MM.encode_avi_mjpeg([encode_jpeg_gray(f) for f in frames], 24, 16)
-
-    w, h, got = MM.decode_video_bytes(avi)
-    assert (w, h, len(got)) == (24, 16, 6)
-    for g, f in zip(got, frames):
-        assert np.abs(g.astype(int) - f.astype(int)).max() <= 2
-
-    df = spark.createDataFrame(
-        [(3, bytearray(avi))], "doc_id long, video binary"
-    )
-    sampled = MM.video_frame_sample(df, every_n=2).collect()
-    assert sorted(r["frame_idx"] for r in sampled) == [0, 2, 4]
-    _, _, px = MM.decode_image_bytes(
-        bytes(sorted(sampled, key=lambda r: r["frame_idx"])[1]["frame"])
-    )
-    assert np.abs(px.astype(int) - frames[2].astype(int)).max() <= 2
-
-    # non-MJPEG AVI and unknown containers fail with the documented errors
-    raw_dib_avi = bytearray(avi)
-    i = raw_dib_avi.find(b"00dc")
-    raw_dib_avi[i + 8 : i + 10] = b"XX"  # corrupt the JPEG magic
-    with pytest.raises(NotImplementedError, match="MJPEG"):
-        MM.decode_video_bytes(bytes(raw_dib_avi))
-    with pytest.raises(NotImplementedError, match="register_decoder"):
-        MM.decode_video_bytes(b"RIFF\x04\x00\x00\x00WAVE")
-
-
-def test_gif_round_trip_and_spark_path(spark):
-    from entity_resolution_spark.operators.gif import decode_gif, encode_gif
-
-    rng = np.random.default_rng(6)
-    px = rng.integers(0, 256, size=(24, 40), dtype=np.uint8)
-    # identity gray palette => exact round trip
-    w, h, out = MM.decode_image_bytes(encode_gif(px))
-    assert (w, h) == (40, 24) and np.array_equal(out, px)
-    df = spark.createDataFrame(
-        [(1, bytearray(encode_gif(px)))], "doc_id long, image binary"
-    )
-    r = MM.image_features(df).collect()[0]
-    assert (r["width"], r["height"]) == (40, 24)
-    assert abs(r["mean_luma"] - px.mean()) < 1e-9
-
-
-def test_gif_interlaced_and_color_palette():
-    import struct
-
-    from entity_resolution_spark.operators import gif as G
-
-    rng = np.random.default_rng(8)
-    # color palette: luma collapse must match the shared Rec.601 helper
-    pal = rng.integers(0, 256, size=(16, 3), dtype=np.uint8)
-    idx = rng.integers(0, 16, size=(9, 6), dtype=np.uint8)
-    h, w = idx.shape
-    # hand-build: global 16-color palette (flags size field = 3 -> 2<<3=16)
-    head = b"GIF89a" + struct.pack("<HHBBB", w, h, 0x80 | 0x03, 0, 0)
-    # interlaced descriptor: rows stored in interlace pass order
-    order = (
-        list(range(0, h, 8)) + list(range(4, h, 8))
-        + list(range(2, h, 4)) + list(range(1, h, 2))
-    )
-    stored = idx[order]
-    desc = b"\x2C" + struct.pack("<HHHHB", 0, 0, w, h, 0x40)
-    lzw = G._lzw_encode(stored.tobytes(), 4)
-    blocks = bytearray([4])
-    for i in range(0, len(lzw), 255):
-        c = lzw[i : i + 255]
-        blocks += bytes([len(c)]) + c
-    blocks += b"\x00"
-    # plus a leading extension block (comment) the parser must skip
-    ext = b"\x21\xFE\x05hello\x00"
-    data = head + pal.tobytes() + ext + desc + bytes(blocks) + b"\x3B"
-    w2, h2, out = G.decode_gif(data)
-    rgb = pal[idx]
-    want = MM._luma(rgb[:, :, 0], rgb[:, :, 1], rgb[:, :, 2])
-    assert (w2, h2) == (w, h) and np.array_equal(out, want)
-
-
-def test_jpeg_422_and_444_round_trip():
-    """The remaining subsampling layouts the decoder claims: 4:2:2
-    (horizontal-only chroma subsampling) and 4:4:4 (none)."""
-    from entity_resolution_spark.operators.jpeg import encode_jpeg_ycbcr
-
-    rng = np.random.default_rng(12)
-    for hs, vs in [(2, 1), (1, 1)]:
-        for hw in [(16, 16), (13, 22)]:
-            y = rng.integers(0, 256, size=hw, dtype=np.uint8)
-            ch = (hw[0] + vs - 1) // vs
-            cw = (hw[1] + hs - 1) // hs
-            cb = rng.integers(0, 256, size=(ch, cw), dtype=np.uint8)
-            cr = rng.integers(0, 256, size=(ch, cw), dtype=np.uint8)
-            w, h, out = MM.decode_image_bytes(
-                encode_jpeg_ycbcr(y, cb, cr, hs=hs, vs=vs)
-            )
-            assert (w, h) == (hw[1], hw[0]), (hs, vs, hw)
-            assert np.abs(out.astype(int) - y.astype(int)).max() <= 2
-
-
-def test_jpeg_restart_markers_round_trip():
-    """DRI + RSTn resync path: byte-aligned markers, DC predictor reset."""
-    from entity_resolution_spark.operators.jpeg import (
-        decode_jpeg,
-        encode_jpeg_gray,
-    )
-
-    rng = np.random.default_rng(13)
-    for hw, ri in [((24, 40), 2), ((32, 32), 3), ((17, 23), 1)]:
-        px = rng.integers(0, 256, size=hw, dtype=np.uint8)
-        data = encode_jpeg_gray(px, quant=1, restart_interval=ri)
-        assert b"\xff\xdd" in data  # DRI segment present
-        w, h, out = decode_jpeg(data)
-        assert (w, h) == (hw[1], hw[0])
-        assert np.abs(out.astype(int) - px.astype(int)).max() <= 2
-
-
 def test_audio_spectral_features(spark):
     """A pure 440 Hz sine: dominant bin and centroid land on the tone;
     zero-crossing rate matches 2f/sr; a 4 kHz tone separates cleanly."""
@@ -659,322 +450,22 @@ def test_audio_spectral_features(spark):
     assert a == b
 
 
-def test_jpeg_non_interleaved_single_component_scan():
-    """T.81 A.2.2: a single-component scan is NON-interleaved (sampling
-    factors ignored, one block per MCU, raster order) — real grayscale
-    crawl JPEGs declare 2x2 sampling with an ns=1 scan."""
-    from entity_resolution_spark.operators.jpeg import (
-        decode_jpeg,
-        encode_jpeg_gray,
-    )
-
-    rng = np.random.default_rng(21)
-    px = rng.integers(0, 256, size=(24, 40), dtype=np.uint8)
-    data = bytearray(encode_jpeg_gray(px))
-    i = data.find(b"\xff\xc0")
-    samp_off = i + 11  # SOF0: marker(2) len(2) prec(1) h(2) w(2) nc(1) cid(1)
-    assert data[samp_off] == 0x11
-    data[samp_off] = 0x22  # declare 2x2 sampling; entropy data unchanged
-    w, h, out = decode_jpeg(bytes(data))
-    assert (w, h) == (40, 24)
-    assert np.abs(out.astype(int) - px.astype(int)).max() <= 2
-
-
-def test_jpeg_truncation_raises_codec_error_everywhere():
-    """Truncated crawl bytes raise the codec's NotImplementedError at any
-    cut point — never a bare IndexError that obscures the cause."""
-    from entity_resolution_spark.operators.jpeg import (
-        decode_jpeg,
-        encode_jpeg_gray,
-    )
-
-    base = encode_jpeg_gray(
-        np.tile(np.arange(64, dtype=np.uint8).reshape(8, 8), (4, 4))
-    )
-    for cut in range(4, len(base), 5):
-        try:
-            decode_jpeg(base[:cut])
-        except NotImplementedError:
-            pass  # the documented corrupt/truncated-input signal
-
-
-def test_jpeg_fill_bytes_before_markers_are_skipped():
-    """T.81 B.1.1.2: any run of 0xFF fill bytes may pad before a marker.
-    Padded files must decode identically to the unpadded encoding."""
-    from entity_resolution_spark.operators.jpeg import encode_jpeg_gray
-
-    rng = np.random.default_rng(11)
-    img = rng.integers(0, 256, size=(16, 16), dtype=np.uint8)
-    data = encode_jpeg_gray(img, quant=1)
-    for marker in (b"\xff\xdb", b"\xff\xc0", b"\xff\xda"):
-        i = data.find(marker)
-        data = data[:i] + b"\xff\xff\xff" + data[i:]
-    w, h, out = MM.decode_image_bytes(data)
-    assert (w, h) == (16, 16)
-    assert np.abs(out.astype(int) - img.astype(int)).max() <= 2
-
-
-def test_jpeg_corrupt_entropy_raises_contract_error():
-    """Corrupt entropy data raises NotImplementedError per the module
-    contract — never a bare EOFError (marker mid-scan) or the internal
-    _RestartMarker (stray RSTn in a non-interleaved scan)."""
-    from entity_resolution_spark.operators.jpeg import encode_jpeg_gray
-
-    rng = np.random.default_rng(12)
-    img = rng.integers(0, 256, size=(16, 16), dtype=np.uint8)
-    data = encode_jpeg_gray(img, quant=1)
-    sos = data.find(b"\xff\xda")
-    mid = sos + 10 + 8  # a few bytes into the entropy-coded segment
-    # a real marker mid-scan (previously escaped as EOFError)
-    bad_marker = data[:mid] + b"\xff\xc4" + data[mid:]
-    # a stray restart marker with no DRI (previously escaped _RestartMarker)
-    bad_rst = data[:mid] + b"\xff\xd3" + data[mid:]
-    for bad in (bad_marker, bad_rst):
-        with pytest.raises(NotImplementedError):
-            MM.decode_image_bytes(bytes(bad))
-
-
-# --- JPEG progressive (SOF2) -------------------------------------------------
-
-def test_jpeg_progressive_gray_matches_baseline_exactly():
-    """The six-scan progressive script reconstructs the SAME quantized
-    coefficients as the baseline encoding, so the decoded luma must be
-    byte-identical — a far stronger check than tolerance bounds."""
-    from entity_resolution_spark.operators.jpeg import (
-        decode_jpeg,
-        encode_jpeg_gray,
-        encode_jpeg_progressive_gray,
-    )
-
-    rng = np.random.default_rng(31)
-    grad = (np.add.outer(np.arange(24) * 3, np.arange(40) * 2) % 256).astype(
-        np.uint8
-    )
-    noise = rng.integers(0, 256, size=(17, 23), dtype=np.uint8)
-    flat = np.full((16, 16), 130, dtype=np.uint8)  # all-EOB AC scans
-    for img in (grad, noise, flat):
-        for quant in (1, 3):
-            base = decode_jpeg(encode_jpeg_gray(img, quant=quant))
-            prog = decode_jpeg(
-                encode_jpeg_progressive_gray(img, quant=quant)
-            )
-            assert base[:2] == prog[:2]
-            assert np.array_equal(base[2], prog[2]), (img.shape, quant)
-            if quant == 1:
-                assert np.abs(prog[2].astype(int) - img.astype(int)).max() <= 2
-
-
-def test_jpeg_progressive_restart_markers():
-    from entity_resolution_spark.operators.jpeg import (
-        decode_jpeg,
-        encode_jpeg_gray,
-        encode_jpeg_progressive_gray,
-    )
-
-    rng = np.random.default_rng(32)
-    img = rng.integers(0, 256, size=(24, 32), dtype=np.uint8)
-    base = decode_jpeg(encode_jpeg_gray(img, quant=2))
-    prog = decode_jpeg(
-        encode_jpeg_progressive_gray(img, quant=2, restart_interval=3)
-    )
-    assert np.array_equal(base[2], prog[2])
-
-
-def test_jpeg_progressive_color_matches_baseline():
-    """Interleaved DC scans + per-component non-interleaved AC scans over
-    4:2:0/4:2:2 layouts, including an image that is not a whole number of
-    MCUs (the component grid differs from the MCU-padded grid)."""
-    from entity_resolution_spark.operators.jpeg import (
-        decode_jpeg,
-        encode_jpeg_progressive_ycbcr,
-        encode_jpeg_ycbcr,
-    )
-
-    rng = np.random.default_rng(33)
-    for hw, (hs, vs) in [((16, 16), (2, 2)), ((17, 23), (2, 2)),
-                         ((24, 40), (2, 1))]:
-        y = rng.integers(0, 256, size=hw, dtype=np.uint8)
-        ch, cw = (hw[0] + vs - 1) // vs, (hw[1] + hs - 1) // hs
-        cb = rng.integers(0, 256, size=(ch, cw), dtype=np.uint8)
-        cr = rng.integers(0, 256, size=(ch, cw), dtype=np.uint8)
-        base = decode_jpeg(encode_jpeg_ycbcr(y, cb, cr, quant=1, hs=hs, vs=vs))
-        prog = decode_jpeg(
-            encode_jpeg_progressive_ycbcr(y, cb, cr, quant=1, hs=hs, vs=vs)
-        )
-        assert base[:2] == prog[:2] == (hw[1], hw[0])
-        assert np.array_equal(base[2], prog[2]), (hw, hs, vs)
-        assert np.abs(prog[2].astype(int) - y.astype(int)).max() <= 2
-
-
-def test_jpeg_progressive_truncation_raises_everywhere():
-    """Cutting a progressive file at ANY byte raises the contract error
-    (or, for cuts beyond the last scan's data, still decodes) — never an
-    internal exception type."""
-    from entity_resolution_spark.operators.jpeg import (
-        decode_jpeg,
-        encode_jpeg_progressive_gray,
-    )
-
-    rng = np.random.default_rng(34)
-    img = rng.integers(0, 256, size=(16, 16), dtype=np.uint8)
-    data = encode_jpeg_progressive_gray(img, quant=2)
-    for cut in range(2, len(data), 7):
-        try:
-            decode_jpeg(data[:cut])
-        except NotImplementedError:
-            pass  # the documented corrupt/truncated-input signal
-
-
-def test_jpeg_progressive_through_spark_image_features(spark):
-    from entity_resolution_spark.operators.jpeg import (
-        encode_jpeg_progressive_gray,
-    )
-
-    rng = np.random.default_rng(35)
-    rows = []
-    for i in range(3):
-        px = rng.integers(0, 256, size=(8, 16), dtype=np.uint8)
-        rows.append((i, bytearray(encode_jpeg_progressive_gray(px)), px))
-    df = spark.createDataFrame(
-        [(i, b) for i, b, _ in rows], "doc_id long, image binary"
-    )
-    feats = {r["doc_id"]: r for r in MM.image_features(df).collect()}
-    for i, _, px in rows:
-        assert (feats[i]["width"], feats[i]["height"]) == (16, 8)
-        assert abs(feats[i]["mean_luma"] - px.mean()) <= 2
-
-
-# --- FLAC (lossless audio, RFC 9639) -----------------------------------------
-
-def _flac_fixture_pcm(n=3000, sr=16000, seed=51):
-    rng = np.random.default_rng(seed)
-    t = np.arange(n)
-    return (
-        (np.sin(2 * np.pi * 440 * t / sr) * 9000).astype(np.int64)
-        + rng.integers(-60, 60, n)
-    )
-
-
-def test_flac_exact_round_trip_all_paths():
-    """FLAC is lossless: decode(encode(pcm)) must equal pcm EXACTLY, on
-    every subframe/residual/stereo variant the decoder implements."""
-    from entity_resolution_spark.operators.flac import decode_flac, encode_flac
-
-    mono = _flac_fixture_pcm()
-    variants = [
-        dict(),
-        dict(subframe_mode="verbatim"),
-        dict(subframe_mode="verbatim", wasted_bits=3),
-        dict(partition_order=2),
-        dict(force_escape=True),
-        dict(rice2=True),
-        dict(block_size=192),
-    ]
-    for kw in variants:
-        pcm = (mono & ~7) if kw.get("wasted_bits") else mono
-        sr, bps, out = decode_flac(encode_flac(16000, pcm, **kw))
-        assert (sr, bps) == (16000, 16)
-        assert np.array_equal(out[:, 0], pcm), kw
-
-    left = _flac_fixture_pcm(seed=52)
-    right = left + np.random.default_rng(53).integers(-200, 200, len(left))
-    st = np.stack([left, right], axis=1)
-    for mode in ["independent", "mid_side", "left_side", "right_side"]:
-        sr, bps, out = decode_flac(
-            encode_flac(8000, st, stereo_mode=mode, block_size=512)
-        )
-        assert np.array_equal(out, st), mode
-
-    # constant (silence) blocks
-    sil = np.zeros(700, dtype=np.int64)
-    _, _, out = decode_flac(encode_flac(44100, sil))
-    assert np.array_equal(out[:, 0], sil)
-
-
-def test_flac_matches_planted_wav():
-    """Same PCM through the WAV path and the FLAC path must agree
-    sample-for-sample after the shared mono/int16 normalization."""
-    from entity_resolution_spark.operators.flac import encode_flac
-
-    pcm = _flac_fixture_pcm().astype(np.int16)
-    sr_w, wav_mono = MM.decode_audio_bytes(MM.encode_wav(16000, pcm))
-    sr_f, flac_mono = MM.decode_audio_bytes(
-        encode_flac(16000, pcm.astype(np.int64))
-    )
-    assert sr_w == sr_f == 16000
-    assert np.array_equal(wav_mono, flac_mono)
-
-
-def test_flac_truncation_raises_contract_error():
-    from entity_resolution_spark.operators.flac import decode_flac, encode_flac
-
-    data = encode_flac(16000, _flac_fixture_pcm(n=1500), block_size=256)
-    for cut in range(4, len(data), 11):
-        try:
-            decode_flac(data[:cut])
-        except NotImplementedError:
-            pass  # the documented corrupt/truncated-input signal
-
-
-def test_flac_crc_corruption_detected():
-    from entity_resolution_spark.operators.flac import decode_flac, encode_flac
-
-    data = bytearray(encode_flac(16000, _flac_fixture_pcm(n=500)))
-    # flip a bit inside the first frame's entropy data
-    data[len(data) // 2] ^= 0x10
-    with pytest.raises(NotImplementedError, match="FLAC"):
-        decode_flac(bytes(data))
-
-
-def test_flac_spectral_features_through_spark(spark):
-    """audio_features + audio_spectral_features over a FLAC column find
-    the planted tone, matching the same PCM delivered as WAV."""
-    from entity_resolution_spark.operators.flac import encode_flac
-
-    sr = 16000
-    t = np.arange(sr)
-    pcm = (np.sin(2 * np.pi * 440 * t / sr) * 10000).astype(np.int64)
-    df = spark.createDataFrame(
-        [
-            (1, bytearray(encode_flac(sr, pcm))),
-            (2, bytearray(MM.encode_wav(sr, pcm.astype(np.int16)))),
-        ],
-        "doc_id long, audio binary",
-    )
-    feats = {r["doc_id"]: r for r in MM.audio_features(df).collect()}
-    assert feats[1]["sample_rate"] == sr and feats[1]["n_samples"] == sr
-    assert abs(feats[1]["duration_s"] - 1.0) < 1e-9
-    assert abs(feats[1]["rms"] - feats[2]["rms"]) < 1e-9
-    spec = {r["doc_id"]: r for r in MM.audio_spectral_features(df).collect()}
-    for c in spec[1].asDict():
-        if c == "doc_id":
-            continue
-        assert abs(spec[1][c] - spec[2][c]) < 1e-6, c
-    # the dominant bin sits at the planted tone (frame=512 @ 16 kHz
-    # gives 31.25 Hz bins; 440 Hz lands in the 437.5 Hz bin)
-    assert abs(spec[1]["dominant_hz"] - 440.0) < 31.25
-
-
-# --- register_decoder integration examples (round-5 item 8) ------------------
-
 def test_registered_decoder_overrides_builtin_on_decodable_fixture(spark):
     """Strict precedence on a fixture the BUILT-IN codec could also decode:
-    a registered decoder claiming JPEG magic must win over operators/jpeg.py
-    (the CLAUDE.md ordering invariant — plugging Pillow in replaces the
-    pure-python path, it doesn't race it)."""
-    from entity_resolution_spark.operators.jpeg import encode_jpeg_gray
+    a registered decoder claiming PNG magic must win over the built-in PNG
+    decoder (the documented ordering invariant — plugging Pillow in replaces
+    the pure-python path, it doesn't race it)."""
+    real = MM.encode_png(np.full((8, 8), 77, dtype=np.uint8))
 
-    real = encode_jpeg_gray(np.full((8, 8), 77, dtype=np.uint8))
-
-    def sentinel_jpeg_decoder(data):
-        if data[:2] != b"\xff\xd8":
+    def sentinel_png_decoder(data):
+        if data[:8] != MM.PNG_SIG:
             return None
         return 1, 1, np.array([[255]], dtype=np.uint8)  # unmistakable
 
     # built-in path first: real dimensions
     w, h, px = MM.decode_image_bytes(real)
-    assert (w, h) == (8, 8) and abs(int(px.mean()) - 77) <= 2
-    MM.register_decoder("image", sentinel_jpeg_decoder)
+    assert (w, h) == (8, 8) and int(px.mean()) == 77
+    MM.register_decoder("image", sentinel_png_decoder)
     try:
         assert MM.decode_image_bytes(real)[:2] == (1, 1)
         # and through the Spark operator (closure ships by value)
@@ -1016,136 +507,3 @@ def test_mp3_plug_point_on_realistic_frame_bytes(spark):
         assert (r["sample_rate"], r["n_samples"]) == (44100, 64)
     finally:
         MM.clear_decoders("audio")
-
-
-def test_pillow_integration_example_if_importable(spark):
-    """The real-library wiring, exactly as a deployment would do it; skips
-    cleanly when Pillow isn't in the container (it isn't in this sandbox —
-    the test documents and guards the recipe, the sentinel test above
-    proves the precedence mechanics)."""
-    Image = pytest.importorskip("PIL.Image", reason="Pillow not installed")
-    import io as _io
-
-    def pillow_decoder(data):
-        try:
-            img = Image.open(_io.BytesIO(data)).convert("L")
-        except Exception:
-            return None
-        px = np.asarray(img, dtype=np.uint8)
-        return img.width, img.height, px
-
-    from entity_resolution_spark.operators.jpeg import encode_jpeg_gray
-
-    real = encode_jpeg_gray(np.full((8, 8), 50, dtype=np.uint8))
-    MM.register_decoder("image", pillow_decoder)
-    try:
-        w, h, px = MM.decode_image_bytes(real)
-        assert (w, h) == (8, 8) and abs(int(px.mean()) - 50) <= 2
-    finally:
-        MM.clear_decoders("image")
-
-
-def test_pydub_mp3_integration_example_if_importable(spark):
-    pydub = pytest.importorskip("pydub", reason="pydub not installed")
-    import io as _io
-
-    def pydub_mp3_decoder(data):
-        if data[:3] != b"ID3" and data[:2] != b"\xff\xfb":
-            return None
-        seg = pydub.AudioSegment.from_file(_io.BytesIO(data), format="mp3")
-        pcm = np.array(seg.get_array_of_samples(), dtype=np.int16)
-        if seg.channels > 1:
-            pcm = pcm.reshape(-1, seg.channels).mean(axis=1).astype(np.int16)
-        return seg.frame_rate, pcm
-
-    MM.register_decoder("audio", pydub_mp3_decoder)
-    MM.clear_decoders("audio")
-
-
-# --- MP4 / ISO-BMFF (Motion-JPEG) --------------------------------------------
-
-def test_mp4_mjpeg_round_trip_and_frame_sample(spark):
-    """Real container #2: Motion-JPEG MP4 through the full sample-table
-    walk (stsd/stsz/stsc/stco) + the Spark frame-sampling operator."""
-    from entity_resolution_spark.operators.jpeg import encode_jpeg_gray
-    from entity_resolution_spark.operators.mp4 import encode_mp4_mjpeg
-
-    rng = np.random.default_rng(61)
-    frames = [rng.integers(0, 256, size=(16, 24), dtype=np.uint8)
-              for _ in range(6)]
-    mp4 = encode_mp4_mjpeg([encode_jpeg_gray(f, quant=1) for f in frames],
-                           24, 16)
-    w, h, got = MM.decode_video_bytes(mp4)
-    assert (w, h, len(got)) == (24, 16, 6)
-    for a, b in zip(frames, got):
-        assert np.abs(a.astype(int) - b.astype(int)).max() <= 2
-
-    df = spark.createDataFrame(
-        [(3, bytearray(mp4))], "doc_id long, video binary"
-    )
-    sampled = MM.video_frame_sample(df, every_n=2).collect()
-    assert sorted(r["frame_idx"] for r in sampled) == [0, 2, 4]
-
-
-def test_mp4_chunked_and_co64_layouts():
-    """Multi-chunk stsc runs (ragged final chunk = second run) and 64-bit
-    co64 offsets decode identically to the single-chunk layout."""
-    from entity_resolution_spark.operators.jpeg import encode_jpeg_gray
-    from entity_resolution_spark.operators.mp4 import (
-        decode_mp4_mjpeg,
-        encode_mp4_mjpeg,
-    )
-
-    rng = np.random.default_rng(62)
-    frames = [rng.integers(0, 256, size=(8, 8), dtype=np.uint8)
-              for _ in range(7)]
-    jpegs = [encode_jpeg_gray(f, quant=1) for f in frames]
-    base = decode_mp4_mjpeg(encode_mp4_mjpeg(jpegs, 8, 8))
-    for kw in [dict(samples_per_chunk=3), dict(samples_per_chunk=2),
-               dict(use_co64=True), dict(samples_per_chunk=3, use_co64=True)]:
-        w, h, got = decode_mp4_mjpeg(encode_mp4_mjpeg(jpegs, 8, 8, **kw))
-        assert (w, h, len(got)) == (8, 8, 7), kw
-        for a, b in zip(base[2], got):
-            assert np.array_equal(a, b), kw
-
-
-def test_mp4_contract_errors():
-    from entity_resolution_spark.operators.jpeg import encode_jpeg_gray
-    from entity_resolution_spark.operators.mp4 import (
-        decode_mp4_mjpeg,
-        encode_mp4_mjpeg,
-    )
-
-    rng = np.random.default_rng(63)
-    frames = [rng.integers(0, 256, size=(8, 8), dtype=np.uint8)
-              for _ in range(3)]
-    mp4 = encode_mp4_mjpeg([encode_jpeg_gray(f) for f in frames], 8, 8)
-    # truncation sweep: contract error or success, never internal types
-    for cut in range(8, len(mp4), 13):
-        try:
-            decode_mp4_mjpeg(mp4[:cut])
-        except NotImplementedError:
-            pass
-    # compressed codec names the fourcc and points at the plug point
-    bad = bytearray(mp4)
-    i = bad.find(b"jpeg", bad.find(b"stsd"))
-    bad[i : i + 4] = b"avc1"
-    with pytest.raises(NotImplementedError, match="avc1"):
-        decode_mp4_mjpeg(bytes(bad))
-    # untrusted 32-bit counts must be bounded BEFORE allocation: a 12-byte
-    # patch claiming 2^31 samples (or an out-of-range stsc run) raises the
-    # contract error instead of fabricating a multi-GB list (MemoryError)
-    import struct as _struct
-
-    from entity_resolution_spark.operators.mp4 import mp4_video_samples
-
-    huge = bytearray(mp4)
-    i = huge.find(b"stsz")
-    huge[i + 8 : i + 16] = _struct.pack(">II", 1, 0x7FFFFFFF)
-    with pytest.raises(NotImplementedError, match="stsz"):
-        mp4_video_samples(bytes(huge))
-    runaway = bytearray(mp4)
-    i = runaway.find(b"stsc")
-    runaway[i + 12 : i + 16] = _struct.pack(">I", 0x7FFFFFF0)
-    with pytest.raises(NotImplementedError, match="stsc"):
-        mp4_video_samples(bytes(runaway))
