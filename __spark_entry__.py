@@ -3,7 +3,8 @@
 ``entry(spark)`` runs the flagship end-to-end ER pipeline on the sf0.001
 documents table.  ``queries()`` exposes each implemented operator from
 SURVEY.md §2 as a (spark, sf_dir) -> DataFrame callable; ``oracle_sql()``
-gives the DuckDB-equivalent SQL for every SQL-expressible one.
+gives the DuckDB-equivalent SQL for every SQL-expressible one (from the
+repo-level ``oracles`` module, which is never shipped to the workers).
 
 Column-name discipline: every computed column is aliased identically in the
 Spark query and the oracle SQL (the driver hash-compares sorted columns).
@@ -35,15 +36,6 @@ TABLES = [
 ]
 
 
-def _doc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-# ---------------------------------------------------------------------------
-# Shared SQL fragments — the Spark expression and DuckDB SQL are kept textually
-# parallel so reviewers can line them up.
-# ---------------------------------------------------------------------------
-
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: full ER pipeline (block → weight → prune → CC) over sf0.001
     documents; returns (component_id, size) cluster summary."""
@@ -51,7 +43,7 @@ def entry(spark: SparkSession) -> DataFrame:
     from entity_resolution_spark.operators import components, pairs
 
     entrypoints.ensure_shipped(spark)
-    docs = _doc(spark, "/root/testdata/sf0.001").select(
+    docs = entrypoints._doc(spark, "/root/testdata/sf0.001").select(
         F.col("doc_id").alias("record_id")
     )
     blocks = entrypoints._blocks(spark, "/root/testdata/sf0.001")
@@ -70,6 +62,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    from entity_resolution_spark import entrypoints
+    import oracles
 
-    return entrypoints.oracle_sql()
+    return oracles.oracle_sql()

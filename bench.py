@@ -2,8 +2,10 @@
 
 Default mode (driver contract): run the headline queries at
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]`` and print ONE JSON line:
+``local[$SPARK_GRAFT_CPUS]`` and print two JSON lines: the full result
     {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+then, last, its headline fields alone (``SUMMARY_KEYS``), short enough to
+survive a cut that keeps only the tail of stdout.
 
 ``--scaling`` mode (north_rule evidence): run the candidate-pair scoring job
 at two parallelism levels (local[8] vs local[32] — the sandbox substitute for
@@ -29,6 +31,8 @@ WARM_SF_DIR = (
     else SF_DIR
 )
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+
+SUMMARY_KEYS = ("metric", "value", "unit", "sf", "cpus", "n_queries")
 
 HEADLINE = [
     "blocking_keys",
@@ -93,100 +97,10 @@ HEADLINE = [
 ]
 
 
-def _timings_from_tail(tail: str) -> dict[str, float]:
-    """Recover per-query timings from a driver-truncated stdout tail.
-
-    The driver keeps only the LAST N chars of bench stdout; when the JSON
-    line outgrows that window its head is cut off and the driver records
-    ``parsed: null`` (this happened to BENCH_r04.json).  The queries dict
-    survives almost intact in the text, so regex the ``"name": secs`` pairs
-    out of the segment that ends at the dict's closing ``}`` — a name whose
-    head was truncated ("e_pairs") simply never matches a current query
-    name, which the drift detector already ignores.
-    """
-    import re as _re
-
-    m = _re.search(r'"queries"\s*:\s*\{', tail)
-    seg = tail[m.end():] if m else tail
-    end = seg.find("}")
-    if end >= 0:
-        seg = seg[:end]
-    return {
-        name: float(val)
-        for name, val in _re.findall(r'"([A-Za-z_][A-Za-z0-9_]*)"\s*:\s*([0-9.]+)', seg)
-    }
-
-
-def _previous_round_timings() -> tuple[str | None, dict[str, float]]:
-    """Newest BENCH_r{N}.json with usable timings → (round tag, per-query secs).
-
-    Prefers the driver-parsed JSON; falls back to tail recovery
-    (`_timings_from_tail`), then to the next-older round file.
-    """
-    import glob
-    import re as _re
-
-    rounds: list[tuple[int, str]] = []
-    for path in glob.glob(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                                       "BENCH_r*.json")):
-        m = _re.search(r"BENCH_r(\d+)\.json$", path)
-        if m:
-            rounds.append((int(m.group(1)), path))
-    for n, path in sorted(rounds, reverse=True):
-        try:
-            with open(path) as f:
-                doc = json.load(f)
-            parsed = doc.get("parsed") if isinstance(doc, dict) else None
-            timings = dict((parsed or doc if isinstance(doc, dict) else {})
-                           .get("queries") or {})
-            if not timings and isinstance(doc.get("tail"), str):
-                timings = _timings_from_tail(doc["tail"])
-            if timings:
-                return f"r{n:02d}", timings
-        except Exception:
-            continue
-    return None, {}
-
-
 def _force(df) -> int:
     """Force full computation of every column (noop sink), return row count."""
     df.write.format("noop").mode("overwrite").save()
     return 0
-
-
-def _isolated_remeasure(flagged: list[str], reps: int = 3) -> dict:
-    """Fresh-session re-measure of detector-flagged queries.
-
-    Rounds 2-4 each produced ≥1 spurious regression flag that a manual
-    isolated re-measure (warm-up rep, then N timed reps, median) later
-    adjudicated as a sweep-position/contention artifact. This runs that
-    exact protocol automatically BEFORE the bench JSON is written, so a
-    committed BENCH_r{N}.json can never carry an unadjudicated flag: every
-    ``regressions`` entry ships with its isolated reps, median, and a
-    noise/regression verdict under the same thresholds as the detector.
-    """
-    if not flagged:
-        return {}
-    import __spark_entry__ as M
-    from entity_resolution_spark.session import get_spark
-
-    spark = get_spark(app_name="er-bench-isolated", master=f"local[{CPUS}]",
-                      shuffle_partitions=2 * CPUS)
-    qs = M.queries()
-    out: dict[str, list[float] | None] = {}
-    for name in flagged:
-        try:
-            _force(qs[name](spark, WARM_SF_DIR))  # hot codegen/Arrow paths
-            times = []
-            for _ in range(reps):
-                t0 = time.perf_counter()
-                _force(qs[name](spark, SF_DIR))
-                times.append(round(time.perf_counter() - t0, 3))
-            out[name] = times
-        except Exception:
-            out[name] = None
-    spark.stop()
-    return out
 
 
 def run_default() -> None:
@@ -225,65 +139,21 @@ def run_default() -> None:
     dt_pairs = time.perf_counter() - t0
     spark.stop()
 
-    # per-query delta vs the previous round's recorded bench, normalized by
-    # the median cur/prev ratio over shared queries ("host drift") — this
-    # virtualized host runs 10-30% faster or slower between rounds, which
-    # would otherwise flag every unchanged query; a real regression is one
-    # that got slower RELATIVE to the rest of the suite (>20% beyond the
-    # drift and >0.5 s absolute)
-    prev_tag, prev = _previous_round_timings()
-    shared = {n: timings[n] / prev[n] for n in timings if n in prev and prev[n] > 0}
-    drift = sorted(shared.values())[len(shared) // 2] if shared else 1.0
-    regressions = {
-        name: {"prev": prev[name], "cur": cur,
-               "pct": round(100.0 * (cur - prev[name]) / prev[name], 1),
-               "pct_vs_drift": round(100.0 * (cur / (prev[name] * drift) - 1), 1)}
-        for name, cur in timings.items()
-        if name in prev and cur > prev[name] * drift * 1.2
-        and cur - prev[name] * drift > 0.5
+    full = {
+        "metric": "headline_total_runtime",
+        "value": round(total, 3),
+        "unit": "sec",
+        "queries": timings,
+        "sf": SF_DIR.rstrip("/").split("sf")[-1],
+        "candidate_pairs": n_pairs,
+        "candidate_pairs_per_sec": round(n_pairs / max(dt_pairs, 1e-9)),
+        "cpus": CPUS,
+        "n_queries": len(HEADLINE),
     }
-    # auto-adjudication: every flag is re-measured in isolation (fresh
-    # session, warm-up rep, 3 timed reps, median) before the JSON exists
-    iso = _isolated_remeasure(sorted(regressions))
-    for name, entry in regressions.items():
-        times = iso.get(name)
-        if not times:
-            entry["isolated_verdict"] = "remeasure_failed"
-            continue
-        med = sorted(times)[len(times) // 2]
-        entry["isolated_reps"] = times
-        entry["isolated_median"] = med
-        still_slow = (med > prev[name] * drift * 1.2
-                      and med - prev[name] * drift > 0.5)
-        entry["isolated_verdict"] = (
-            "regression" if still_slow else "noise (sweep-position artifact)"
-        )
-    print(
-        json.dumps(
-            {
-                "metric": "headline_total_runtime",
-                "value": round(total, 3),
-                "unit": "sec",
-                "queries": timings,
-                "sf": SF_DIR.rstrip("/").split("sf")[-1],
-                "candidate_pairs": n_pairs,
-                "candidate_pairs_per_sec": round(n_pairs / max(dt_pairs, 1e-9)),
-                "cpus": CPUS,
-                "n_queries": len(HEADLINE),
-                # apples-to-apples vs the previous round (the headline set
-                # grows each round, so raw totals aren't comparable)
-                "comparable_total": round(
-                    sum(v for n, v in timings.items() if n in prev), 3
-                ),
-                "prev_comparable_total": round(
-                    sum(v for n, v in prev.items() if n in timings), 3
-                ),
-                "prev_round": prev_tag,
-                "host_drift_ratio": round(drift, 3),
-                "regressions": regressions,
-            }
-        )
-    )
+    print(json.dumps(full))
+    # the headline fields again, last and short, so a reader that keeps only
+    # the tail of stdout still gets a parseable line
+    print(json.dumps({k: full[k] for k in SUMMARY_KEYS}))
 
 
 def _scaling_worker(cores: int, sf_dir: str, mode: str = "threads",

@@ -11,6 +11,8 @@ timeout interrupts without poisoning the connection.
 
 from __future__ import annotations
 
+import hashlib
+import json
 import os
 import sys
 
@@ -23,6 +25,9 @@ sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 from oracle_compare import compare_one, register_views, run_with_timeout  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_SMALL", "/root/testdata/sf0.001")
+PINNED_DIGESTS = os.path.join(
+    os.path.dirname(__file__), "..", "perfbench", "oracle_digests.json"
+)
 
 # one query per canonical dtype family: string+long (blocking_keys),
 # double (tfidf_cosine), timestamp_ntz (user_sessions), argmax-compaction
@@ -100,3 +105,17 @@ def test_oracle_timeout_interrupts_and_connection_survives(con):
     with pytest.raises(TimeoutError):
         run_with_timeout(con, thunk, 1.0)
     assert con.execute("SELECT 41 + 1").fetchone()[0] == 42
+
+
+def test_prepared_corpus_sql_keys_a_pinned_perfbench_digest():
+    """perfbench keys the pinned ``webtext_prepare`` digest on
+    ``fixture_hash:sha256(oracle_sql()["prepared_corpus"])``; an edit to a
+    shared oracle fragment that changes this string would silently unpin the
+    benchmark and make it recompute the DuckDB closure."""
+    from entity_resolution_spark.entrypoints import oracle_sql
+
+    sql = oracle_sql()["prepared_corpus"]
+    sql_hash = hashlib.sha256(sql.encode("utf-8")).hexdigest()
+    with open(PINNED_DIGESTS) as f:
+        keys = json.load(f)
+    assert sql_hash in {key.split(":", 1)[1] for key in keys}

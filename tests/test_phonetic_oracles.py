@@ -11,8 +11,8 @@ import duckdb
 import pandas as pd
 from pyspark.sql import functions as F
 
-from entity_resolution_spark.entrypoints import _metaphone_sql, _soundex_sql
 from entity_resolution_spark.functions.blocking_keys import _metaphone_one
+from oracles import _metaphone_sql, _soundex_sql
 
 WORDS = [
     "Robert", "Rupert", "Ashcraft", "Ashcroft", "Tymczak", "Pfister",
